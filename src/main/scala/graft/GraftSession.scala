@@ -421,24 +421,42 @@ final class GraftSession private (val spark: SparkSession, val dataDir: String) 
 
 object GraftSession {
 
-  /** Attach to an existing session: installs every graft extension
-    * (idempotent) and scopes the facade to `dataDir`'s tables.
+  /** Attach to an existing session: attaches the [[Graft]] catalog where
+    * it is missing ([[Graft.install]]) and scopes the facade to
+    * `dataDir`'s tables.
     */
   def attach(spark: SparkSession, dataDir: String): GraftSession = {
     Graft.install(spark)
     new GraftSession(spark, dataDir)
   }
 
-  /** Open a new local session (the Verify/Bench config) over `dataDir`. */
-  def open(dataDir: String, cpus: Int = 4): GraftSession = {
+  /** Open a new local session (the one config, [[local]]) over `dataDir`. */
+  def open(dataDir: String, cpus: Int = 4): GraftSession = attach(local(cpus), dataDir)
+
+  /** The one graft session config — Bench, Verify, the tests, [[open]]
+    * and every demo and tool main get their session here, so the engine
+    * that is gated, benchmarked and shipped is the same one:
+    * `local[cpus]` with `cpus` shuffle partitions, UTC, no UI, the
+    * sort-based shuffle writer for every shuffle (`bypassMergeThreshold=0`:
+    * the bypass writer opens one file per reduce partition per map task,
+    * and never fires at production partition counts anyway) and the
+    * whole graft catalog via [[graft.functions.GraftExtensions]].
+    */
+  def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.shuffle.sort.bypassMergeThreshold", 0)
+      .config("spark.sql.extensions", classOf[functions.GraftExtensions].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    attach(spark, dataDir)
+    spark
   }
+
+  /** [[local]] with `SPARK_GRAFT_CPUS` slots, `default` when it is unset. */
+  def fromEnv(default: Int): SparkSession =
+    local(sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.toInt))
 }

@@ -127,7 +127,6 @@ object SparkEntry {
           |SELECT source, string_agg(v, ',' ORDER BY h, v) AS sample_ids
           |FROM r WHERE rn <= 5 GROUP BY source""".stripMargin) { (s, dir) =>
         import org.apache.spark.sql.functions._
-        graft.functions.BottomKSample.register(s)
         graft.Tables.documents(s, dir)
           .groupBy(col("source"))
           .agg(concat_ws(",", call_function("bottom_k_sample",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,14 +9,7 @@ object Verify {
     // (the driver always passes exactly 2 args → full dump)
     val nameFilter = args.lift(2).map(_.r)
     def keep(n: String) = nameFilter.forall(_.findFirstIn(n).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv(4)
     new java.io.File(outDir).mkdirs()
     val timed = sys.env.contains("SPARK_GRAFT_VERIFY_TIME")
     SparkEntry.queries.foreach { case (name, fn) =>

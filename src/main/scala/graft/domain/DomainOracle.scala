@@ -158,12 +158,14 @@ object DomainOracle {
     * diverges on genuine half-cent ties (a 2-dp price × a 2-dp rate is
     * exactly x.xxx5 whenever the cents digit is odd). Routing through
     * VARCHAR reproduces Spark's semantics: DuckDB's double→VARCHAR cast
-    * is the same shortest round-trip repr, the DECIMAL(26,12) parse is
-    * exact for ≤12-dp reprs (longer tails round 10 digits below the
-    * cents boundary — no cascade), and decimal `round` is half-up.
+    * is the same shortest round-trip repr, the DECIMAL(38,20) parse is
+    * exact for the repr of any double in [0.001, 1e18) (17 significant
+    * digits fit in 20 places; a narrower parse rounds the repr first, so
+    * 174.83499999999998 became 174.835 and then 174.84 where Spark gives
+    * 174.83), and decimal `round` is half-up. Pinned by `tools/test_vsnap.py`.
     */
   private def vsnap(x: String): String =
-    s"CAST(round(CAST(CAST($x AS VARCHAR) AS DECIMAL(26,12)), 2) AS DECIMAL(18,2))"
+    s"CAST(round(CAST(CAST($x AS VARCHAR) AS DECIMAL(38,20)), 2) AS DECIMAL(18,2))"
 
   /** Spark `dec2(d2 * dec4(rate))` — exact decimal product, cents snap. */
   private def mul2(a: String, rate: String): String =

@@ -1,7 +1,6 @@
 package graft.domain
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 
 /** Runnable end-to-end batch demo (the README example):
   * `sbt "runMain graft.domain.PipelineDemo"` — generated messy bronze →
@@ -10,14 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(4)
 
     val cfg = DomainConfig(dedupeFreight = true)
     val spec = GenSpec()

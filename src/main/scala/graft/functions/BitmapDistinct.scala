@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -166,35 +165,4 @@ case class BitmapOrAgg(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BitmapOrAgg =
     copy(child = newChildren.head)
-}
-
-object BitmapDistinct {
-  /** Register `bitmap_distinct(key, domain)`, `bitmap_bytes(key, domain)`
-    * and `bitmap_or_count(bytes)` for call_function.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_distinct",
-      exprs => {
-        require(exprs.length == 2, "bitmap_distinct(key, domain)")
-        BitmapDistinctAgg(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]).toAggregateExpression()
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_bytes",
-      exprs => {
-        require(exprs.length == 2, "bitmap_bytes(key, domain)")
-        BitmapBytesAgg(exprs(0),
-          exprs(1).eval().asInstanceOf[Int]).toAggregateExpression()
-      },
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bitmap_or_count",
-      exprs => {
-        require(exprs.length == 1, "bitmap_or_count(bytes)")
-        BitmapOrAgg(exprs(0)).toAggregateExpression()
-      },
-      "built-in")
-  }
 }

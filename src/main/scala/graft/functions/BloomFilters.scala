@@ -1,8 +1,7 @@
 package graft.functions
 
 import java.io.ByteArrayOutputStream
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{lit, xxhash64}
 
 /** Broadcast Bloom-filter pre-filtering — the standard way to cut a
@@ -16,32 +15,20 @@ import org.apache.spark.sql.functions.{lit, xxhash64}
   *     (the sketch is KBs–MBs; the side it summarizes may be billions of
   *     rows — the driver never sees those);
   *  2. probe: `bloom_might_contain(<literal sketch>, xxhash64(key))` — a
-  *     codegen'd native Predicate (Spark's own [[BloomFilterMightContain]],
-  *     registered here as a SQL function) evaluated at scan speed before
-  *     any shuffle;
+  *     codegen'd native Predicate (Spark's own `BloomFilterMightContain`,
+  *     `bloom_might_contain` in the [[graft.Graft]] catalog) evaluated at
+  *     scan speed before any shuffle;
   *  3. verify: the exact join downstream removes false positives, so
   *     results are identical to the unfiltered plan (no false negatives by
   *     construction).
   */
 object BloomFilters {
 
-  /** Register `bloom_might_contain(bloomBinary, xxhash64Value)` on the
-    * session. The bloom argument must be foldable (a literal built by
-    * [[bloomLiteral]]) — that is Spark's own typecheck for this Predicate.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => {
-        require(exprs.length == 2,
-          s"bloom_might_contain(bloom_bytes, hash64) expects 2 arguments, got ${exprs.length}")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      }, "built-in")
-
   /** Build a Bloom filter over `xxhash64(key)` of `df` and return it as a
     * foldable binary literal. Key space matches `bloom_might_contain`'s
     * probe (`mightContainLong` over xxhash64), so membership is exact up
-    * to the configured false-positive rate.
+    * to the configured false-positive rate. `bloom_might_contain`'s bloom
+    * argument must be foldable — Spark's own typecheck for the predicate.
     */
   def bloomLiteral(df: DataFrame, key: Column,
       expectedItems: Long, fpp: Double = 0.01): Column =

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -140,18 +139,4 @@ case class BottomKSample(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): BottomKSample =
     copy(child = newChildren.head)
-}
-
-object BottomKSample {
-  /** Register `bottom_k_sample(value, k, seed)` for SQL + call_function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k_sample",
-      exprs => {
-        require(exprs.length == 3, "bottom_k_sample(value, k, seed)")
-        BottomKSample(exprs(0),
-          exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int]).toAggregateExpression()
-      },
-      "built-in")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -102,19 +101,6 @@ case class CountMinSketchAgg(
 }
 
 object CountMinSketch {
-
-  /** Register `count_min_sketch(value, d, w, seed)` for call_function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min_sketch",
-      exprs => {
-        require(exprs.length == 4, "count_min_sketch(value, d, w, seed)")
-        CountMinSketchAgg(exprs(0),
-          exprs(1).eval().asInstanceOf[Int],
-          exprs(2).eval().asInstanceOf[Int],
-          exprs(3).eval().asInstanceOf[Int]).toAggregateExpression()
-      },
-      "built-in")
 
   /** Point estimate from an evaluated sketch: min over the d counters the
     * value hashes to. Same digest windows as the aggregate's update.

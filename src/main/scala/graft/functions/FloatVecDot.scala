@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -71,21 +70,9 @@ case class FloatVecDot(left: Expression, right: Expression)
 
 object FloatVecDot {
 
-  /** Register `vec_dot` on the session (SQL + Column surface). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => {
-        require(exprs.length == 2,
-          s"vec_dot(vec_a, vec_b) expects 2 arguments, got ${exprs.length}")
-        FloatVecDot(exprs(0), exprs(1))
-      }, "built-in")
-
-  /** Column-API surface — requires [[register]] on the session first
-    * (the public Column↔Expression bridge in Spark 4 is the function
-    * registry + `call_function`).
+  /** Column-API surface (the public Column↔Expression bridge in Spark 4
+    * is the function registry + `call_function`).
     */
-  def vecDot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
+  def vecDot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
-  }
 }

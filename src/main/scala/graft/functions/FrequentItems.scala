@@ -2,7 +2,6 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -128,24 +127,4 @@ case class FrequentItems(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): FrequentItems =
     copy(child = newChildren.head)
-}
-
-object FrequentItems {
-  /** Register `freq_items(value, k)` for SQL + call_function. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "freq_items",
-      exprs => {
-        require(exprs.length == 2, "freq_items(value, k)")
-        require(exprs(1).foldable, "freq_items: k must be a literal")
-        val k = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case s: Short => s.toInt
-          case other => throw new IllegalArgumentException(
-            s"freq_items: k must be an integer literal, got $other")
-        }
-        FrequentItems(exprs(0), k).toAggregateExpression()
-      },
-      "built-in")
 }

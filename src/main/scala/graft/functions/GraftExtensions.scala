@@ -1,53 +1,22 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session-extension entry point — the deployment path for this engine's
-  * custom expressions on a shared cluster:
+/** Session-extension entry point: injects the whole [[graft.Graft]]
+  * catalog (every graft SQL function, the bounded-levenshtein optimizer
+  * rule and the top-k planner strategy) into every session, so no
+  * application code registers anything:
   *
   * {{{
   * spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions …
   * }}}
   *
-  * registers `vec_dot` (and future custom expressions) in every session
-  * without application code calling [[FloatVecDot.register]]. Runnable
-  * proof: `sbt "runMain graft.functions.ExtensionsDemo"`.
+  * [[graft.GraftSession.local]] builds every graft session with it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        FloatVecDot(exprs(0), exprs(1))))
-    // optimizer rule: unbounded levenshtein<=k verify predicates → length
-    // pre-filter + banded early-exit levenshtein (graft.plans)
-    ext.injectOptimizerRule(_ => graft.plans.BoundedLevenshteinRule)
-    // planner strategy: the native bounded-heap per-group top-k operator
-    // (graft.plans.TopKPerGroup logical → partial/final exec pair)
-    ext.injectPlannerStrategy(_ => graft.plans.GraftStrategies)
-  }
-}
-
-/** Proof main: a fresh session built with the extension resolves
-  * `vec_dot` from SQL with no manual registration.
-  */
-object ExtensionsDemo {
-  def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-extensions-demo")
-      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val got = spark.sql(
-      "SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT))," +
-        " array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT)))").first.getDouble(0)
-    assert(got == 11.0, s"vec_dot via extensions returned $got")
-    println(s"[extensions-demo] vec_dot resolved via spark.sql.extensions: $got")
-    spark.stop()
+    graft.Graft.functions.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => graft.Graft.rule)
+    ext.injectPlannerStrategy(_ => graft.Graft.strategy)
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -117,20 +117,7 @@ case class PqAdcTable(vec: Expression, cbExpr: Expression)
 
 object PqAdcTable {
 
-  /** Register `pq_adc_table` on the session (SQL + Column surface). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_adc_table", exprs => {
-        // wrong SQL arity must surface as an analysis-time error with the
-        // expected signature, not an IndexOutOfBoundsException
-        require(exprs.length == 2,
-          s"pq_adc_table(quantized_vec, codebook) expects 2 arguments, got ${exprs.length}")
-        PqAdcTable(exprs(0), exprs(1))
-      }, "built-in")
-
   /** Column-API surface. */
-  def adcTable(spark: SparkSession, vec: Column, codebook: Column): Column = {
-    register(spark)
+  def adcTable(vec: Column, codebook: Column): Column =
     org.apache.spark.sql.functions.call_function("pq_adc_table", vec, codebook)
-  }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -124,20 +124,7 @@ case class PqEncode(vec: Expression, cbExpr: Expression)
 
 object PqEncode {
 
-  /** Register `pq_encode` on the session (SQL + Column surface). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_encode", exprs => {
-        // wrong SQL arity must surface as an analysis-time error with the
-        // expected signature, not an IndexOutOfBoundsException
-        require(exprs.length == 2,
-          s"pq_encode(quantized_vec, codebook) expects 2 arguments, got ${exprs.length}")
-        PqEncode(exprs(0), exprs(1))
-      }, "built-in")
-
-  /** Column-API surface: `codes = pqEncode(spark, quantizedVec, typedlit(codebook))`. */
-  def pqEncode(spark: SparkSession, vec: Column, codebook: Column): Column = {
-    register(spark)
+  /** Column-API surface: `codes = pqEncode(quantizedVec, typedlit(codebook))`. */
+  def pqEncode(vec: Column, codebook: Column): Column =
     org.apache.spark.sql.functions.call_function("pq_encode", vec, codebook)
-  }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -16,7 +17,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *     value, a serialized bloom of `xxhash64(CAST(key AS BIGINT))`
   *     (Spark's own
   *     [[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate]],
-  *     registered here as `bloom_agg` — the same sketch
+  *     `bloom_agg` in the [[graft.Graft]] catalog — the same sketch
   *     InjectRuntimeFilter builds at runtime, surfaced as a PERSISTED
   *     index artifact) plus the row count. The cast pins ONE hash space
   *     for build and probe: xxhash64 over an IntegerType column hashes
@@ -52,17 +53,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * in no bloom — a miss.
   */
 object BloomIndex {
-
-  /** Register `bloom_agg(hash64, expectedItems, numBits)` on the session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_agg",
-      exprs => {
-        require(exprs.length == 3, "bloom_agg(hash64, expectedItems, numBits)")
-        org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2), 0, 0)
-          .toAggregateExpression()
-      }, "built-in")
 
   /** Resolve the current index version under `indexDir`: the `_CURRENT`
     * pointer if present, else the highest `v%05d` directory (covers a
@@ -125,7 +115,6 @@ object BloomIndex {
   def build(spark: SparkSession, dataDir: String, indexDir: String,
       partCol: String, keyCol: String,
       expectedPerPartition: Long = 1000000L, fpp: Double = 0.01): Unit = {
-    register(spark)
     // Spark's own BloomFilter sizing rule (optimalNumOfBits)
     val numBits = math.ceil(
       -expectedPerPartition * math.log(fpp) / (math.log(2) * math.log(2))).toLong
@@ -149,19 +138,20 @@ object BloomIndex {
       partCol: String, keyCol: String, parts: Seq[String],
       expectedPerPartition: Long = 1000000L, fpp: Double = 0.01): Unit = {
     require(parts.nonEmpty, "refreshPartitions needs at least one partition")
-    register(spark)
     val numBits = math.ceil(
       -expectedPerPartition * math.log(fpp) / (math.log(2) * math.log(2))).toLong
     // read ONLY the touched partitions (explicit path list, the lookup's
     // own pruning discipline)
     val touched = spark.read.option("basePath", dataDir)
-      .parquet(parts.map(p => s"$dataDir/$partCol=$p"): _*)
+      .parquet(parts.map(partPath(dataDir, partCol, _)): _*)
       .groupBy(col(partCol).cast("string").as("part"))
       .agg(count(lit(1)).as("n_rows"),
         call_function("bloom_agg", xxhash64(col(keyCol).cast("long")),
           lit(expectedPerPartition), lit(numBits)).as("bloom"))
+    // null-safe: a null (default-partition) row must survive a refresh
+    // of the other partitions, and `NOT (NULL IN (...))` drops it
     val untouched = read(spark, indexDir)
-      .filter(!col("part").isin(parts: _*))
+      .filter(!parts.map(p => col("part") <=> lit(p)).reduce(_ || _))
     // the new version must not lazily re-read rows from a version dir the
     // publish is about to expire — pin the union before publishing
     publish(spark, indexDir, untouched.unionByName(touched).localCheckpoint(true))
@@ -208,7 +198,6 @@ object BloomIndex {
   def appendSideIndex(spark: SparkSession, indexDir: String,
       partCol: String, keyCol: String, batch: DataFrame,
       expectedItems: Long = 100000L, fpp: Double = 0.01): Long = {
-    register(spark)
     val numBits = math.ceil(
       -expectedItems * math.log(fpp) / (math.log(2) * math.log(2))).toLong
     val side = batch
@@ -317,14 +306,14 @@ object BloomIndex {
     // lives in a key-k candidate partition ⊆ the union of candidates; the
     // pinned schema skips per-run footer inference (guide §6).
     val partsByKey = candidatePartsMulti(spark, s"$out/index", keys)
-    val parts = partsByKey.values.flatten.toSeq.distinct.sorted
+    val parts = partsByKey.values.flatten.toSeq.distinct.sortBy(Option(_))
     val schema = graft.Tables.documents
     val pruned =
       if (parts.isEmpty)
         spark.read.schema(schema).parquet(s"$out/data").filter(lit(false))
       else
         spark.read.option("basePath", s"$out/data").schema(schema)
-          .parquet(parts.map(p => s"$out/data/lang=$p"): _*)
+          .parquet(parts.map(partPath(s"$out/data", "lang", _)): _*)
           .filter(col("doc_id").isin(keys: _*))
     pruned.select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
   }
@@ -342,7 +331,14 @@ object BloomIndex {
       spark.read.parquet(dataDir).filter(lit(false)) // schema-stable empty
     else
       spark.read.option("basePath", dataDir)
-        .parquet(parts.map(p => s"$dataDir/$partCol=$p"): _*)
+        .parquet(parts.map(partPath(dataDir, partCol, _)): _*)
         .filter(col(keyCol) === key)
   }
+
+  /** The directory Spark's partitioned writer gives partition value `p`
+    * (the index's `part`): Hive-escaped, and null or empty as
+    * `__HIVE_DEFAULT_PARTITION__`.
+    */
+  private def partPath(dataDir: String, partCol: String, p: String): String =
+    s"$dataDir/${ExternalCatalogUtils.getPartitionPathString(partCol, p)}"
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.FloatVecDot
 
 /** IVF (inverted-file) approximate nearest neighbor over the embeddings
   * table — the production-scale complement to the sign-bucket LSH in
@@ -41,7 +40,6 @@ object IvfIndex {
     */
   def build(spark: SparkSession, vectors: DataFrame, k: Int = 16, seed: Long = 42L,
       maxIter: Int = 8): Ivf = {
-    FloatVecDot.register(spark)
     val ds = vectors.withColumn("features", array_to_vector(col("embedding")))
     // few Lloyd iterations suffice: IVF needs a *partitioning*, not optimal
     // centroids — recall is governed by nprobe, and the nprobe=k exactness
@@ -70,7 +68,6 @@ object IvfIndex {
     * cells. `nprobe == k` is exact brute force.
     */
   def query(spark: SparkSession, ivf: Ivf, probes: DataFrame, nprobe: Int): DataFrame = {
-    FloatVecDot.register(spark)
     val probeCells = probes
       .join(broadcast(ivf.centroids))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
@@ -319,7 +316,6 @@ object IvfIndex {
     */
   def queryQuantized(spark: SparkSession, ivf: Ivf, probes: DataFrame,
       nprobe: Int): DataFrame = {
-    FloatVecDot.register(spark)
     val cells = probeCells(probes, ivf, nprobe)
       .join(broadcast(probes.select(col("vec_id").as("query_id"),
         col("embedding").as("q_emb"))), Seq("query_id"))
@@ -449,7 +445,6 @@ object IvfIndex {
     */
   def ivfPersistedQuery(spark: SparkSession, dir: String,
       topK: Int = 3): DataFrame = {
-    FloatVecDot.register(spark)
     val out = persistedLayout(spark, dir)
     val cents = spark.read.parquet(s"$out/centroids")
     val probes = Tables.embeddings(spark, dir).filter(col("vec_id") < 16)

@@ -96,7 +96,6 @@ object IvfPq {
     */
   def query(spark: SparkSession, dir: String, nProbes: Int = 16,
       nprobe: Int = 4, shortlist: Int = 32, kIvf: Int = 16): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
     val ivf = IvfIndex.indexQFor(spark, dir, kIvf) // cells (shared with e4/e8)
     val pq = PqIndex.indexFor(spark, dir)      // codes (shared with e7)
     val postings = postingsFor(spark, dir, kIvf)

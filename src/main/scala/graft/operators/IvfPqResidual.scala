@@ -64,7 +64,6 @@ object IvfPqResidual {
     // unlike the global-codebook variant there is no assigned⋈encoded
     // join to materialize — the residual encode is per-cell by
     // construction (the r12 e10 ask, same class as e9's postingsFor).
-    graft.functions.PqEncode.register(spark)
     val codes = call_function("pq_encode", col("q"), typedlit(codebook))
     RPq(codebook, rv.select(col("cell_id"), col("vec_id"), codes.as("codes")))
   }
@@ -103,11 +102,9 @@ object IvfPqResidual {
     */
   def query(spark: SparkSession, dir: String, nProbes: Int = 16,
       nprobe: Int = 4, shortlist: Int = 32, kIvf: Int = 16): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
     val ivf = IvfIndex.indexQFor(spark, dir, kIvf)
     val rpq = indexFor(spark, dir, kIvf)
     val probes = Tables.embeddings(spark, dir).filter(col("vec_id") < nProbes)
-    graft.functions.PqAdcTable.register(spark)
     val cb = typedlit(rpq.codebook)
 
     val cells = IvfIndex.probeCells(probes, ivf, nprobe)

@@ -137,7 +137,6 @@ object PqIndex {
     // encode via the native fused-loop expression: the HOF argmin form
     // interprets m·k·dsub catalyst nodes per row — 40 min for a 100k
     // corpus at k=256 vs seconds for PqEncode (bit-identical results)
-    graft.functions.PqEncode.register(spark)
     val codes = call_function("pq_encode",
       quantize(col("embedding")), typedlit(codebook))
     Pq(codebook, vectors.select(col("vec_id"), col("label"), codes.as("codes")), vectors)
@@ -189,7 +188,6 @@ object PqIndex {
     // threaded explicitly like every other builder in this file —
     // SparkSession.active throws on threads with no active session
     // (e.g. a pool thread driving a query build).
-    graft.functions.PqAdcTable.register(spark)
     call_function("pq_adc_table", qemb, typedlit(pq.codebook))
   }
 
@@ -232,7 +230,6 @@ object PqIndex {
     */
   def queryRefined(spark: SparkSession, pq: Pq, probes: DataFrame,
       shortlist: Int = 32, topk: Int = 1): DataFrame = {
-    graft.functions.FloatVecDot.register(spark)
     val cand = query(spark, pq, probes, topk = shortlist)
       .select(col("query_id"), col("neighbor_id"))
     val raw = pq.raw

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.FloatVecDot
 
 /** SemDeDup — semantic deduplication of a corpus by embedding clusters
   * (Abbas et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -47,7 +46,6 @@ object SemDedup {
   def verdicts(assigned: DataFrame, tau: Double): DataFrame = {
     val spark = assigned.sparkSession
     import spark.implicits._
-    FloatVecDot.register(spark)
     val v = assigned
       .select($"cell_id", $"vec_id", $"embedding",
         sqrt(call_function("vec_dot", $"embedding", $"embedding")).as("nrm"))

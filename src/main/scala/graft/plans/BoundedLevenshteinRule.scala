@@ -28,9 +28,8 @@ import org.apache.spark.sql.types.IntegerType
   * safe under the optimizer's fixed-point batches.
   *
   * Applies to predicates anywhere in the plan (Filter AND Join conditions —
-  * a pushed-down ER verify lands in either). Deployment:
-  * `spark.sql.extensions=graft.functions.GraftExtensions` (injected there)
-  * or `spark.experimental.extraOptimizations` for an existing session.
+  * a pushed-down ER verify lands in either). Part of the [[graft.Graft]]
+  * catalog, so every graft session runs it.
   */
 object BoundedLevenshteinRule extends Rule[LogicalPlan] {
 

@@ -34,9 +34,8 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
   * equal to the window form for any total `ordering` (ties must be
   * broken by the caller's sort columns, same as the window idiom).
   *
-  * Registered through `spark.experimental.extraStrategies` (public API,
-  * done lazily by [[TopKPerGroup.topK]]) and via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * Planned by [[GraftStrategies]], which the [[graft.Graft]] catalog
+  * puts in every graft session.
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],
@@ -106,15 +105,6 @@ case class TopKPerGroupExec(
 
 object TopKPerGroup {
 
-  /** Idempotently make the strategy available on `spark` (public
-    * `experimental.extraStrategies` hook; the `spark.sql.extensions`
-    * path in [[graft.functions.GraftExtensions]] covers shared clusters).
-    */
-  def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GraftStrategies))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftStrategies
-
   /** First `k` rows of each group under `orderBy` (must be a total order
     * for a deterministic result — include a tie-breaker column, exactly
     * as with the window idiom this replaces).
@@ -127,7 +117,6 @@ object TopKPerGroup {
       "topK needs at least one group column — for a GLOBAL top-k use " +
         "orderBy(...).limit(k) (plans TakeOrderedAndProject)")
     val spark = df.sparkSession
-    ensureStrategy(spark)
     val plan = df.queryExecution.analyzed
     def resolve(n: String): Attribute = plan.output
       .find(a => spark.sessionState.conf.resolver(a.name, n))

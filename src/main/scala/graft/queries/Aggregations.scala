@@ -90,7 +90,6 @@ object Aggregations {
       |FROM lineitem GROUP BY 1""".stripMargin) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FrequentItems.register(s)
       Tables.lineitem(s, dir)
         .select(concat($"l_returnflag", lit("-"), $"l_linestatus").as("v"))
         .agg(call_function("freq_items", $"v", lit(32)).as("hh"))
@@ -285,7 +284,6 @@ object Aggregations {
       |FROM o GROUP BY l_returnflag""".stripMargin) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.BottomKSample.register(s)
       val centsStr = (Exact.dec2($"l_extendedprice") * 100).cast("bigint").cast("string")
       val samp = Tables.lineitem(s, dir)
         .groupBy($"l_returnflag")
@@ -500,10 +498,9 @@ object Aggregations {
       |FROM f WHERE n >= 45""".stripMargin) { (s, dir) =>
     import s.implicits._
     val (d, w, seed) = (4, 1024, 11)
-    graft.functions.CountMinSketch.register(s)
     val li = Tables.lineitem(s, dir).select($"l_partkey".cast("string").as("ks"))
     val sketch = li
-      .agg(call_function("count_min_sketch", $"ks", lit(d), lit(w), lit(seed))
+      .agg(call_function("count_min_counters", $"ks", lit(d), lit(w), lit(seed))
         .as("sk"), count(lit(1)).as("n_total"))
       .collect().head
     val sk = sketch.getSeq[Long](0).toIndexedSeq
@@ -537,7 +534,6 @@ object Aggregations {
       |       count(*) AS n_orders
       |FROM orders GROUP BY 1""".stripMargin) { (s, dir) =>
     import s.implicits._
-    graft.functions.BitmapDistinct.register(s)
     Tables.orders(s, dir)
       .groupBy($"o_orderpriority".as("priority"))
       .agg(call_function("bitmap_distinct", $"o_custkey", lit(1 << 21))
@@ -594,7 +590,6 @@ object Aggregations {
       |FROM ex JOIN sk ON ex.l_returnflag = sk.l_returnflag""".stripMargin) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.BottomKSample.register(s)
       val cents = (Exact.dec2($"l_extendedprice") * 100).cast("bigint")
       val base = Tables.lineitem(s, dir).select($"l_returnflag", cents.as("vc"))
       val ex = base.groupBy($"l_returnflag")

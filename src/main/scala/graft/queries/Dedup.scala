@@ -584,7 +584,6 @@ object Dedup {
   val contaminationBloom = Q("d6b_bloom_contamination", contaminationSql) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.BloomFilters.register(s)
       val evalG = evalGrams(s, dir)
       // the sketch build is an eager aggregation — memoize the bytes so
       // repeat constructions of this query (bench min-of-2) skip it

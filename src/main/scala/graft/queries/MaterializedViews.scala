@@ -138,7 +138,6 @@ object MaterializedViews {
       |       string_agg(v, ',' ORDER BY h, v) AS sketch_ids
       |FROM r WHERE rn <= 64 GROUP BY priority""".stripMargin) { (s, dir) =>
     import s.implicits._
-    graft.functions.BottomKSample.register(s)
     val b = Tables.orders(s, dir).select(
       $"o_orderpriority".as("priority"),
       $"o_custkey".cast("string").as("v"),

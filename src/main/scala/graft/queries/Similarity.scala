@@ -56,7 +56,6 @@ object Similarity {
   }) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FloatVecDot.register(s)
       // norms once per row BEFORE the pair join — at scale this is the
       // difference between O(N) and O(Q·N) norm folds
       val e = Tables.embeddings(s, dir)
@@ -99,7 +98,6 @@ object Similarity {
   }) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FloatVecDot.register(s)
       def sig(emb: Column): Column = (0 until 4)
         .map(i => shiftleft(when(element_at(emb, i + 1) >= 0, 1).otherwise(0), i))
         .reduce(_ + _)
@@ -140,7 +138,6 @@ object Similarity {
   }) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FloatVecDot.register(s)
       def sig(emb: Column): Column = (0 until 4)
         .map(i => shiftleft(when(element_at(emb, i + 1) >= 0, 1).otherwise(0), i))
         .reduce(_ + _)
@@ -165,7 +162,6 @@ object Similarity {
   private def multiProbeTop1(s: SparkSession, dir: String,
       sig: Column => Column, bits: Int): DataFrame = {
     import s.implicits._
-    graft.functions.FloatVecDot.register(s)
     val v = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding", $"label", sig($"embedding").as("bucket"),
         norm($"embedding").as("nrm"))
@@ -288,7 +284,6 @@ object Similarity {
     */
   private[queries] def knnGraphDf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.functions.FloatVecDot.register(s)
     Memo.cached(s, dir, "knn_graph_top3") {
       val ivf = graft.operators.IvfIndex.indexQFor(s, dir)
       val v = ivf.assigned.select($"vec_id", $"embedding", $"label", $"cell_id",
@@ -663,7 +658,6 @@ object Similarity {
   }) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FloatVecDot.register(s)
       val e = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding", norm($"embedding").as("nrm"))
       val p = e.filter($"vec_id" === 0)
@@ -877,7 +871,6 @@ object Similarity {
   }) {
     (s, dir) =>
       import s.implicits._
-      graft.functions.FloatVecDot.register(s)
       val sigCol = (0 until 4)
         .map(i => (when(element_at($"embedding", i + 1) >= 0, 1).otherwise(0)
           * lit(1 << i)))
@@ -1911,7 +1904,6 @@ object Similarity {
     import s.implicits._
     val (schema, rows) =
       graft.queries.Memo.cachedValue(s, dir, "e32_cell_caps") {
-        graft.functions.FloatVecDot.register(s)
         val members = graft.operators.IvfIndex.indexQFor(s, dir).assigned
         val reps = members.groupBy($"cell_id")
           .agg(min_by($"embedding", $"vec_id").as("rep_emb"))
@@ -1932,7 +1924,6 @@ object Similarity {
 
   private[graft] def radiusCandCells(s: SparkSession, dir: String, tau: Double): DataFrame = {
     import s.implicits._
-    graft.functions.FloatVecDot.register(s)
     val caps = radiusCellCaps(s, dir)
     val q = Tables.embeddings(s, dir).filter($"vec_id" < 8)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.domain.{Cleanse, DataGen, DomainConfig, GenSpec, Schemas}
 
 /** Runnable demo of the streaming ingest path:
@@ -12,14 +11,7 @@ import graft.domain.{Cleanse, DataGen, DomainConfig, GenSpec, Schemas}
   */
 object StreamDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("graft-stream-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(4)
     val cfg = DomainConfig()
     val bronzeDir = Files.createTempDirectory("demo-bronze").toString
     val silverDir = Files.createTempDirectory("demo-silver").toString

@@ -45,7 +45,6 @@ object StreamingDecontam {
   def prepare(evalDocs: DataFrame, n: Int = 8,
       expectedGrams: Long = 100000L, fpp: Double = 0.01): Screen = {
     val spark = evalDocs.sparkSession
-    graft.functions.BloomFilters.register(spark)
     val evalG = Ngrams.postings(evalDocs, n, distinct = true, outCol = "g")
       .select(col("g")).distinct().cache()
     val bloom = lit(graft.functions.BloomFilters.bloomBytes(

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import graft.functions.FloatVecDot
 import graft.operators.IvfIndex
 
 /** Incremental maintenance of the PERSISTED IVF index (e17 → streaming;
@@ -132,7 +131,6 @@ object StreamingIvf {
   def ingestBatch(batch: DataFrame, indexDir: String, batchId: Long,
       trainOnFirstBatch: Boolean = false, k: Int = 16): Unit = {
     val spark = batch.sparkSession
-    FloatVecDot.register(spark)
     if (batch.isEmpty) return
     val (fs, cRoot) = PartitionedIndex.fsFor(spark, centroidsDir(indexDir))
     if (!fs.exists(cRoot)) {
@@ -373,7 +371,6 @@ object StreamingIvf {
     */
   def probe(spark: SparkSession, indexDir: String, probes: DataFrame,
       nprobe: Int = 4, topK: Int = 3, excludeBatch: Option[Long] = None): DataFrame = {
-    FloatVecDot.register(spark)
     val empty = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
       org.apache.spark.sql.types.StructType.fromDDL(
@@ -451,7 +448,6 @@ object StreamingIvf {
       nprobe: Int = 2, tau: Double = 0.40,
       trainOnFirstBatch: Boolean = true, k: Int = 16): (DataFrame, DataFrame) = {
     val spark = batch.sparkSession
-    FloatVecDot.register(spark)
     if (batch.isEmpty)
       return (spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -717,7 +713,6 @@ object StreamingIvf {
   def splitCell(spark: SparkSession, indexDir: String, cell: Int,
       splitInto: Int = 2): Seq[Int] = {
     require(splitInto >= 2, s"splitInto must be >= 2, got $splitInto")
-    FloatVecDot.register(spark)
     val cents = centroids(spark, indexDir)
     def retiredDirs(): Array[Path] = {
       val (fs, pRoot) = PartitionedIndex.fsFor(spark, postingsDir(indexDir))

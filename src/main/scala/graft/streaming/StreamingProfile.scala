@@ -37,7 +37,6 @@ object StreamingProfile {
     */
   def profileBatch(batch: DataFrame, numCols: Seq[String], keyCol: String,
       domain: Int): (DataFrame, DataFrame) = {
-    graft.functions.BitmapDistinct.register(batch.sparkSession)
     val aggs = numCols.flatMap { c =>
       Seq(count(col(c)).as(s"c_$c"),
         min(col(c)).cast("long").as(s"mn_$c"),
@@ -59,7 +58,6 @@ object StreamingProfile {
     */
   def cumulative(spark: SparkSession, statsDir: String,
       bitmapDir: String): DataFrame = {
-    graft.functions.BitmapDistinct.register(spark)
     val stats = spark.read.parquet(statsDir)
       .groupBy(col("column_name"))
       .agg(sum(col("n_rows")).cast("long").as("n_rows"),

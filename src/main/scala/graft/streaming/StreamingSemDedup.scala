@@ -5,7 +5,6 @@ import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import graft.functions.FloatVecDot
 
 /** Continuous SemDeDup — the streaming face of the e8 batch operator
   * ([[graft.operators.SemDedup]], after Abbas et al. 2023,
@@ -124,7 +123,6 @@ object StreamingSemDedup {
   def screenBatch(batch: DataFrame, indexDir: String, batchId: Long,
       k: Int = 16, tau: Double = 0.40, seed: Long = 42L): DataFrame = {
     val spark = batch.sparkSession
-    FloatVecDot.register(spark)
     // an empty trigger (common with ProcessingTime before data arrives)
     // must not train the codebook on zero rows — defer centroid
     // publication to the first non-empty batch and emit no verdicts

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Measure the WIRED advisor sites (VERDICT r12 next #1, "Done ="):
   * run q9 and the domain gold pipeline disarmed vs armed on a real data
   * dir, report per-mode medians, the advisor's verdicts, and whether it
@@ -15,13 +13,7 @@ object AdvisorProbe {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "5").toInt
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(32)
 
     def time(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9

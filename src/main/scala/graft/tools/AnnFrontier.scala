@@ -92,7 +92,6 @@ object AnnFrontier {
     */
   def graphCompare(spark: SparkSession): Unit = {
     import spark.implicits._
-    graft.functions.FloatVecDot.register(spark)
     val e = graft.Tables.embeddings(spark, corpusDir)
 
     def graphEdges(blocked: DataFrame): Set[(Long, Long)] = {
@@ -135,14 +134,7 @@ object AnnFrontier {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     ensureCorpus(spark)
     println(s"corpus: $nVecs x $dims + $nProbes planted, $nClusters clusters, $nProbes probes")
     // `runMain graft.tools.AnnFrontier graph` runs only the e11 blocking

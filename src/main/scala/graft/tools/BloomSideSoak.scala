@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measures the bloom-index append-maintenance trade the side indexes
@@ -16,14 +15,7 @@ object BloomSideSoak {
   def main(args: Array[String]): Unit = {
     val partRows = args.headOption.map(_.toInt).getOrElse(500000)
     val nAppends = args.lift(1).map(_.toInt).getOrElse(16)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import graft.operators.BloomIndex
 
     val work = java.nio.file.Files.createTempDirectory("bloom-side-soak").toString

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** r13 scratch: does a .cache()d plan containing a higher-order-function
@@ -12,10 +11,7 @@ import org.apache.spark.sql.functions._
 object CacheLambdaCheck {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.fromEnv(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -141,14 +141,8 @@ object DecadeSoak {
     f"${math.log(t10 / t1) / math.log(10.0)}%.2f"
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(32)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     import spark.implicits._
     val real = "/root/testdata/sf0.1"
 

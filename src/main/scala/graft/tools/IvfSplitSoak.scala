@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingIvf
 
@@ -18,14 +18,7 @@ import graft.streaming.StreamingIvf
 object IvfSplitSoak {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toInt).getOrElse(100000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
 
     // the realistic skew: the codebook trains on BALANCED early data
     // (batch 0 spreads evenly over 8 axis clusters), then the ingest
@@ -82,7 +75,6 @@ object IvfSplitSoak {
     // force BEFORE and AFTER the split (the lossless contract, priced
     // here on the soak corpus, pinned in StreamingIvfSplitSpec)
     import org.apache.spark.sql.DataFrame
-    graft.functions.FloatVecDot.register(spark)
     def bruteTop1(corpus: DataFrame): Set[String] = {
       val d = (a: String, b: String) => call_function("vec_dot", col(a), col(b))
       probes.select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingIvf
 
@@ -33,14 +33,7 @@ object MaintenanceCadenceSoak {
     val perBatch = args.lift(1).map(_.toInt).getOrElse(5000)
     val compactEvery = 4
     val splitHot = 3000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
 
     // train-then-drift (the IvfSplitSoak lesson): batch 0 is balanced
     // over 8 axis clusters — the codebook trains on it — then 80% of

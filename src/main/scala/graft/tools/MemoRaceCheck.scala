@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** r13 scratch: does the session-memoized shingle-postings frame actually
   * materialize its buffers when its first consumers are query subtrees
   * (possibly broadcast futures), and how do d13/d23 time before vs after a
@@ -10,11 +8,7 @@ import org.apache.spark.sql.SparkSession
 object MemoRaceCheck {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
+    val spark = graft.GraftSession.fromEnv(32)
     spark.sparkContext.setLogLevel("ERROR")
     def t(f: => Any): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale soak for the MONITORED composed intake (the r9-round depth item
@@ -27,14 +26,7 @@ import org.apache.spark.sql.functions._
 object MonitoredIntakeSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(500000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import graft.streaming.{StreamingDecontam, StreamingDrift, StreamingIntake, StreamingProfile}
 
     val corpus = s"/tmp/graft_intake_soak_$nDocs"

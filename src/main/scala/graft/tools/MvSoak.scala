@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingMv
 
@@ -18,16 +18,10 @@ import graft.streaming.StreamingMv
   */
 object MvSoak {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val nBatches = args.headOption.map(_.toInt).getOrElse(16)
     val perBatch = args.lift(1).map(_.toInt).getOrElse(32000)
     val nGroups = 64
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("mv-soak").toString

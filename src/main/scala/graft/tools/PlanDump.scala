@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print a registry query's physical plan (local debugging of
   * PlanSpec findings; not part of the library surface).
   */
@@ -9,11 +7,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.fromEnv(4)
     spark.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.queries(name)(spark, sfDir)
     println(df.queryExecution.explainString(

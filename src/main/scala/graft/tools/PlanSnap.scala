@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan capture for the optimization rounds: write
   * `.explain("formatted")` for each named registry query to
   * `<outDir>/<name>_<suffix>.txt` in ONE session (PlanDump spawns a JVM
@@ -16,12 +14,7 @@ object PlanSnap {
     val suffix = args(1)
     val sfDir = args(2)
     val names = args.drop(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
+    val spark = graft.GraftSession.fromEnv(32)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>

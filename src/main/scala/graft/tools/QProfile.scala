@@ -2,10 +2,8 @@ package graft.tools
 
 import java.util.concurrent.ConcurrentLinkedQueue
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Generalized per-query profiler (Q7Profile's stage-metrics harness for
-  * ANY registry query) — the r13 optimization round's measure-first tool
+/** Per-query stage-metrics profiler for ANY registry query — the r13 optimization round's measure-first tool
   * (guide §1): run a query N times in one JVM and split each run's wall
   * time into stage-metric buckets — executor run/CPU, GC, shuffle write,
   * fetch wait, result serialization, bytes in/shuffled — plus stage/task
@@ -22,14 +20,7 @@ object QProfile {
     val names = args(0).split(",").toSeq // comma-separated for batch runs
     val runs = args.lift(1).map(_.toInt).getOrElse(5)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(32)
 
     val detail = sys.env.get("SPARK_GRAFT_QPROF_DETAIL").contains("1")
     final case class StageRow(

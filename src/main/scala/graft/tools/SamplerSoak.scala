@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-stream soak for [[graft.streaming.StreamingSampler]] — the claim
@@ -21,15 +20,9 @@ import org.apache.spark.sql.functions._
   */
 object SamplerSoak {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
     val nBatches = args.headOption.map(_.toInt).getOrElse(200)
     val docsPerBatch = args.lift(1).map(_.toInt).getOrElse(1000)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import spark.implicits._
 
     val dir = "/tmp/graft_sampler_soak"

@@ -58,14 +58,7 @@ object ScaleSoak {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     val d1 = "/tmp/graft_soak_1x"
     val d10 = "/tmp/graft_soak_10x"
     ensureCorpus(spark, d1, 5000, 2000)

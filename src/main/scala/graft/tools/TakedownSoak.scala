@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.GraftSession
 import graft.streaming.{StreamingRelease, StreamingTombstone}
@@ -30,14 +30,7 @@ object TakedownSoak {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toInt).getOrElse(1000000)
     val nTake = args.drop(1).headOption.map(_.toInt).getOrElse(10000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import spark.implicits._
 
     def time[T](body: => T): (T, Double) = {

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.streaming.StreamingIvf
 
@@ -29,17 +29,8 @@ object VectorErasureSoak {
   def main(args: Array[String]): Unit = {
     val nVecs = args.headOption.map(_.toInt).getOrElse(200000)
     val nRetract = args.lift(1).map(_.toInt).getOrElse(2000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     import spark.implicits._
-    graft.functions.FloatVecDot.register(spark)
-
     def time[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = body
       (r, (System.nanoTime() - t0) / 1e9)

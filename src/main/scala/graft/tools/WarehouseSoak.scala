@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Superlinearity soak for the WAREHOUSE families (qN/jN/aN/wN/oN/dqN)
   * over the real testdata's 10× step (sf0.01 → sf0.1) — the sibling of
   * [[ScaleSoak]], which soaks the document/embedding families on its own
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 object WarehouseSoak {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.fromEnv(16)
     val d1 = "/root/testdata/sf0.01"
     val d10 = "/root/testdata/sf0.1"
     val fam = args.headOption.getOrElse("^(q\\d|j\\d|a\\d|w\\d|o\\d|dq\\d)").r

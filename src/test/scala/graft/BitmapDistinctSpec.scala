@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.BitmapDistinct
 
 /** Gates for the bitmap-distinct aggregate beyond oracle parity:
   * partition-order invariance, range-band decomposability (the property
@@ -13,7 +12,6 @@ class BitmapDistinctSpec extends AnyFunSuite with SparkTestKit {
   import spark.implicits._
 
   private def distinctOf(df: org.apache.spark.sql.DataFrame, domain: Int): Long = {
-    BitmapDistinct.register(spark)
     df.agg(call_function("bitmap_distinct", col("k"), lit(domain)))
       .as[Long].head()
   }
@@ -31,7 +29,6 @@ class BitmapDistinctSpec extends AnyFunSuite with SparkTestKit {
     val band = 512
     val exact = keys.distinct().count()
     val banded = {
-      BitmapDistinct.register(spark)
       keys.withColumn("b", expr(s"k div $band"))
         .withColumn("r", expr(s"k % $band"))
         .groupBy($"b")

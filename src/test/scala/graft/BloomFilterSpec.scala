@@ -26,7 +26,6 @@ class BloomFilterSpec extends AnyFunSuite with SparkTestKit {
 
   test("bloom literal membership: no false negatives") {
     import spark.implicits._
-    graft.functions.BloomFilters.register(spark)
     val keys = (1L to 1000L).map(i => s"key_$i").toDF("k")
     val bloom = graft.functions.BloomFilters.bloomLiteral(keys, $"k", 1000L)
     val kept = keys.filter(

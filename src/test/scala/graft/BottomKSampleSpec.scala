@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.BottomKSample
 
 /** The custom TypedImperativeAggregate must be deterministic under ANY
   * partitioning (the property reservoir sampling lacks).
@@ -12,7 +11,6 @@ class BottomKSampleSpec extends AnyFunSuite with SparkTestKit {
   import spark.implicits._
 
   test("bottom-k sample: k bound, membership, and partition-order independence") {
-    BottomKSample.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select($"source", $"doc_id".cast("string").as("d"))
 
@@ -42,7 +40,6 @@ class BottomKSampleSpec extends AnyFunSuite with SparkTestKit {
   }
 
   test("bottom-k via SQL and different seeds draw different samples") {
-    BottomKSample.register(spark)
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs_tmp")
     val a = spark.sql(
       "SELECT bottom_k_sample(CAST(doc_id AS STRING), 5, 1) FROM docs_tmp")

@@ -16,8 +16,7 @@ class CountMinSpec extends AnyFunSuite with SparkTestKit {
   private val (d, w, seed) = (4, 1024, 11)
 
   private def sketchOf(df: org.apache.spark.sql.DataFrame): IndexedSeq[Long] = {
-    CountMinSketch.register(spark)
-    df.agg(call_function("count_min_sketch", col("ks"), lit(d), lit(w), lit(seed))
+    df.agg(call_function("count_min_counters", col("ks"), lit(d), lit(w), lit(seed))
       .as("sk")).collect().head.getSeq[Long](0).toIndexedSeq
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.FloatVecDot
 
 /** The custom codegen Expression must agree bit-for-bit with the
   * composable HOF fold it replaces, on real data and edge cases.
@@ -16,7 +15,6 @@ class FloatVecDotSpec extends AnyFunSuite with SparkTestKit {
       lit(0.0), (acc, x) => acc + x)
 
   test("agrees exactly with the aggregate/zip_with fold on the corpus") {
-    FloatVecDot.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(200)
     val a = e.select($"vec_id".as("ia"), $"embedding".as("ea"))
     val b = e.select($"vec_id".as("ib"), $"embedding".as("eb"))
@@ -28,7 +26,6 @@ class FloatVecDotSpec extends AnyFunSuite with SparkTestKit {
   }
 
   test("SQL surface and eval edge cases") {
-    FloatVecDot.register(spark)
     Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f)))
       .toDF("a", "b").createOrReplaceTempView("v")
     assert(spark.sql("SELECT vec_dot(a, b) FROM v").first.getDouble(0) == 32.0)
@@ -43,7 +40,6 @@ class FloatVecDotSpec extends AnyFunSuite with SparkTestKit {
   }
 
   test("interpreted eval matches codegen") {
-    FloatVecDot.register(spark)
     val e = Tables.embeddings(spark, sfDir).limit(50)
     val withCodegen = e.select(call_function("vec_dot", $"embedding", $"embedding"))
       .collect().map(_.getDouble(0)).toSeq

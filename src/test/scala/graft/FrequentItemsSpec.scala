@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.FrequentItems
 
 /** Gates for the Misra–Gries frequent-items aggregate: exact-regime
   * equality with GROUP BY (what the a15 oracle also checks), and the
@@ -15,7 +14,6 @@ class FrequentItemsSpec extends AnyFunSuite with SparkTestKit {
   import spark.implicits._
 
   private def sketch(df: org.apache.spark.sql.DataFrame, k: Int): Map[String, Long] = {
-    FrequentItems.register(spark)
     df.agg(call_function("freq_items", col("v"), lit(k)).as("hh"))
       .select(explode($"hh").as("e"))
       .select($"e.item", $"e.est_count").as[(String, Long)].collect().toMap

@@ -85,7 +85,6 @@ class MvSpec extends AnyFunSuite with SparkTestKit {
   test("mv2 sketch merge: standing ∪ delta re-ranked equals whole-data sketch") {
     val out = MaterializedViews.mv2SketchMv.run(spark, sfDir).cache()
     // whole-data sketch computed directly (no split) via the same aggregate
-    graft.functions.BottomKSample.register(spark)
     val whole = Tables.orders(spark, sfDir)
       .select($"o_orderpriority".as("priority"), $"o_custkey".cast("string").as("v"))
       .dropDuplicates("priority", "v")

@@ -22,7 +22,6 @@ class RadiusSpec extends AnyFunSuite with SparkTestKit {
     df.collect().map(_.mkString("|")).sorted.toSeq
 
   private def brute(dir: String, tau: Double) = {
-    graft.functions.FloatVecDot.register(spark)
     def dot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       call_function("vec_dot", a, b)
     val e = Tables.embeddings(spark, dir)

@@ -25,6 +25,29 @@ class RegistrySpec extends AnyFunSuite with SparkTestKit {
       "COVERAGE.md gate map is stale or missing — regenerate with `sbt coverageMap`")
   }
 
+  test("one session config, one catalog: the only builder, the only registrar, no build-only Spark flags") {
+    import scala.jdk.CollectionConverters._
+    val mainSrc = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.toString -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8")).toMap
+    def sitesOf(token: String): Map[String, Int] = mainSrc
+      .map { case (p, s) => p -> s.sliding(token.length).count(_ == token) }.filter(_._2 > 0)
+    assert(sitesOf("SparkSession.builder(") ==
+      Map("src/main/scala/graft/GraftSession.scala" -> 1))
+    val registrars = (sitesOf("createOrReplaceTempFunction").keySet ++
+      sitesOf("registerFunction").keySet)
+    assert(registrars == Set("src/main/scala/graft/Graft.scala"), registrars)
+    val build = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("build.sbt")), "UTF-8")
+    assert(!build.contains("-Dspark."), "Spark settings belong in GraftSession.local")
+    // the session the tests run on got its settings from the config alone
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.shuffle.sort.bypassMergeThreshold") == "0")
+    assert(conf.get("spark.ui.enabled") == "false")
+    assert(conf.get("spark.sql.extensions") == classOf[functions.GraftExtensions].getName)
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+  }
+
   test("entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

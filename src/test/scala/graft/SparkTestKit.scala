@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.Suite
 
-/** Shared local session for specs — mirrors the Verify/Bench config. */
+/** Shared local session for specs — the one graft config, [[GraftSession.local]]. */
 trait SparkTestKit extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkTestKit.session
@@ -16,15 +16,5 @@ trait SparkTestKit extends BeforeAndAfterAll { self: Suite =>
 
 object SparkTestKit {
   // one session per JVM: ScalaTest suites share it, saving ~5s per suite
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.local(4)
 }

@@ -183,4 +183,27 @@ class BloomIndexSpec extends AnyFunSuite with SparkTestKit {
       assert(BloomIndex.lookup(spark, dataDir, idxDir, "lang", "k", key).count() == 1L)
     }
   }
+
+  test("null and Hive-escaped partition values resolve to the directories Spark wrote") {
+    // null is written as lang=__HIVE_DEFAULT_PARTITION__ and "a/b" as
+    // lang=a%2Fb; a raw `lang=$p` path names neither
+    val dataDir = tmp("bi-data6") + "/t"
+    val idxDir = tmp("bi-idx6") + "/ix"
+    val langs = Seq[String]("en", null, "a/b", "x=y")
+    langs.zipWithIndex.flatMap { case (l, p) => (0 until 500).map(i => (p * 1000L + i, l)) }
+      .toDF("k", "lang")
+      .write.partitionBy("lang").mode("overwrite").parquet(dataDir)
+    BloomIndex.build(spark, dataDir, idxDir, "lang", "k", 1000L)
+    def lookupsMatchScan(): Unit = for (p <- langs.indices) {
+      val key = p * 1000L + 7
+      val got = BloomIndex.lookup(spark, dataDir, idxDir, "lang", "k", key).collect().toSeq
+      val want = spark.read.parquet(dataDir).filter($"k" === key).collect().toSeq
+      assert(want.size == 1 && got == want, s"key $key in lang=${langs(p)}: got $got")
+    }
+    lookupsMatchScan()
+    // refreshing one partition keeps every other row, the null one included
+    BloomIndex.refreshPartitions(spark, dataDir, idxDir, "lang", "k", Seq("en"), 1000L)
+    assert(BloomIndex.read(spark, idxDir).count() == langs.size.toLong)
+    lookupsMatchScan()
+  }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestKit
-import graft.functions.FloatVecDot
 
 /** The COMPOSED maintenance cadence ([[StreamingIvf.maintenanceTick]] —
   * retraction-aware compaction + hot-cell auto-split), armed in the
@@ -52,7 +51,6 @@ class MaintenanceCadenceSpec extends AnyFunSuite with SparkTestKit {
         "cast(label as int) as label")
 
   private def bruteTop1(all: DataFrame, probes: DataFrame): Set[(Long, Long)] = {
-    FloatVecDot.register(spark)
     val q = probes.select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
     val dot = (a: String, b: String) => call_function("vec_dot", col(a), col(b))
     q.crossJoin(all.select($"vec_id".as("n_id"), $"embedding".as("n_emb")))

@@ -37,7 +37,6 @@ class StreamingIvfRetractSpec extends AnyFunSuite with SparkTestKit {
     * lossless gate compares against (same tie-break as probe()).
     */
   private def brute(probes: DataFrame, corpus: DataFrame, topK: Int = 3): Set[String] = {
-    graft.functions.FloatVecDot.register(spark)
     val q = probes.select(col("vec_id").as("query_id"), col("embedding").as("qe"))
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("ce"))
     val cos = call_function("vec_dot", col("qe"), col("ce")) /
