@@ -34,8 +34,13 @@ object Graft {
 
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
     fn("vec_dot(vec_a, vec_b)", classOf[FloatVecDot])(a => FloatVecDot(a(0), a(1))),
-    fn("bloom_might_contain(bloom_bytes, hash64)", classOf[BloomFilterMightContain])(
-      a => BloomFilterMightContain(a(0), a(1))),
+    fn("bloom_might_contain(bloom_bytes, hash64)", classOf[BloomFilterMightContain]) { a =>
+      // a non-foldable bloom (a scalar subquery) passes Spark's type check
+      // but fails codegen and falls back to interpreted evaluation per task
+      require(a(0).foldable, "bloom_might_contain: bloom_bytes must be a literal" +
+        " — build it with graft.functions.BloomFilters.bloomLiteral")
+      BloomFilterMightContain(a(0), a(1))
+    },
     fn("bottom_k_sample(value, k, seed)", classOf[BottomKSample])(
       a => BottomKSample(a(0), int(a(1)), int(a(2))).toAggregateExpression()),
     fn("freq_items(value, k)", classOf[FrequentItems]) { a =>

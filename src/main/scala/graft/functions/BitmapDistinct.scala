@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.types.{DataType, LongType}
 
@@ -22,18 +22,20 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * bitmap counts are decomposable, HLL's are not.
   *
   * Out-of-range or null keys fail loudly (an exact structure must not
-  * silently drop data).
+  * silently drop data). Narrower integer keys are implicitly cast to
+  * BIGINT at analysis (a BIGINT key's plan carries no cast).
   */
 case class BitmapDistinctAgg(
     child: Expression,
     domain: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.BitSet] {
+  extends TypedImperativeAggregate[java.util.BitSet] with ImplicitCastInputTypes {
 
   require(domain >= 1, "domain must be positive")
 
   override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = Seq(LongType)
   override def nullable: Boolean = false
   override def dataType: DataType = LongType
 
@@ -83,11 +85,12 @@ case class BitmapBytesAgg(
     domain: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.BitSet] {
+  extends TypedImperativeAggregate[java.util.BitSet] with ImplicitCastInputTypes {
 
   require(domain >= 1, "domain must be positive")
 
   override def children: Seq[Expression] = Seq(child)
+  override def inputTypes = Seq(LongType)
   override def nullable: Boolean = false
   override def dataType: DataType = org.apache.spark.sql.types.BinaryType
 

@@ -64,7 +64,8 @@ object StreamingDrift {
     * not come back empty: the full-outer join returns every reference
     * bin with n_batch = 0, summing to a spurious max-drift verdict —
     * callers MUST apply the non-null-values guard before persisting
-    * (both [[sink]] and StreamingIntake.sinkFullIvfSplitMonitored do).
+    * ([[processBatch]] holds it for the frozen reference,
+    * [[processBatchRefreshing]] for the refreshing one).
     */
   def screenBatch(batch: DataFrame, ref: Reference, valueCol: String): DataFrame = {
     val cell = batch
@@ -186,21 +187,37 @@ object StreamingDrift {
         spark.range(1).select(lit(version).as("ref_version")),
         pinsDir, batchId)
     val ref = loadReference(spark, refStoreDir, version)
+    try writeScored(batch, batchId, ref, valueCol, binsDir, summaryDir,
+      alertThreshold)(_.withColumn("ref_version", lit(version)))
+    finally { ref.bins.unpersist(); () }
+  }
+
+  /** One micro-batch of [[sink]] (and of the monitored intake): bins as
+    * a `__batch` dynamic overwrite, summary at `summaryDir/batch_id=N`,
+    * both replay-idempotent. Batches with no non-null values write
+    * nothing (no drift evidence either way, and a 0-row histogram would
+    * divide by zero — the explicit skip IS the contract).
+    */
+  def processBatch(spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+      batchId: Long, ref: Reference, valueCol: String, binsDir: String,
+      summaryDir: String, alertThreshold: Long): Unit =
+    if (!batch.filter(col(valueCol).isNotNull).isEmpty)
+      writeScored(batch, batchId, ref, valueCol, binsDir, summaryDir,
+        alertThreshold)(identity)
+
+  /** The bins + summary write both batch bodies share. */
+  private def writeScored(batch: DataFrame, batchId: Long, ref: Reference,
+      valueCol: String, binsDir: String, summaryDir: String,
+      alertThreshold: Long)(stamp: DataFrame => DataFrame): Unit = {
+    val bins = screenBatch(batch, ref, valueCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val bins = screenBatch(batch, ref, valueCol)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        bins.withColumn("__batch", lit(batchId))
-          .write
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .partitionBy("__batch")
-          .parquet(binsDir)
-        summarize(bins, alertThreshold)
-          .withColumn("ref_version", lit(version))
-          .write.mode("overwrite").parquet(ledgerPath)
-      } finally { bins.unpersist(); () }
-    } finally { ref.bins.unpersist(); () }
+      bins.withColumn("__batch", lit(batchId))
+        .write.option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").partitionBy("__batch").parquet(binsDir)
+      stamp(summarize(bins, alertThreshold))
+        .write.mode("overwrite").parquet(s"$summaryDir/batch_id=$batchId")
+    } finally { bins.unpersist(); () }
   }
 
   /** The refreshing streaming sink — [[sink]]'s contract with the
@@ -210,43 +227,21 @@ object StreamingDrift {
       binsDir: String, summaryDir: String, alertThreshold: Long,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchRefreshing(batch.sparkSession, batch, batchId,
-          refStoreDir, valueCol, binsDir, summaryDir, alertThreshold)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+    driftSink(rows, checkpointDir, trigger)((batch, batchId) =>
+      processBatchRefreshing(batch.sparkSession, batch, batchId,
+        refStoreDir, valueCol, binsDir, summaryDir, alertThreshold))
 
-  /** Streaming sink: per-batch bin table (`__batch` dynamic overwrite)
-    * plus the per-batch summary ledger at `batch_id=N` — both
-    * replay-idempotent. Batches with no non-null values write nothing
-    * (no drift evidence either way, and a 0-row histogram would divide
-    * by zero — the explicit skip IS the contract).
-    */
+  /** Streaming sink: [[processBatch]] against the frozen `ref`. */
   def sink(rows: DataFrame, ref: Reference, valueCol: String,
       binsDir: String, summaryDir: String, alertThreshold: Long,
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    rows.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.filter(col(valueCol).isNotNull).isEmpty) {
-          val bins = screenBatch(batch, ref, valueCol)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            bins.withColumn("__batch", lit(batchId))
-              .write
-              .option("partitionOverwriteMode", "dynamic")
-              .mode("overwrite")
-              .partitionBy("__batch")
-              .parquet(binsDir)
-            summarize(bins, alertThreshold)
-              .write.mode("overwrite").parquet(s"$summaryDir/batch_id=$batchId")
-          } finally { bins.unpersist(); () }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+    driftSink(rows, checkpointDir, trigger)((batch, batchId) =>
+      processBatch(batch.sparkSession, batch, batchId, ref, valueCol,
+        binsDir, summaryDir, alertThreshold))
+
+  private def driftSink(rows: DataFrame, checkpointDir: String, trigger: Trigger)(
+      perBatch: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    rows.writeStream.foreachBatch(perBatch)
+      .option("checkpointLocation", checkpointDir).trigger(trigger).outputMode("append")
 }

@@ -4,37 +4,38 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** The composed intake stage — both admission screens
-  * ([[StreamingNearDup]] d3-style history screening and
-  * [[StreamingDecontam]] d6-style eval screening) over ONE micro-batch
-  * stream in ONE `foreachBatch`, emitting ONE verdict row per document:
+/** The composed intake stage: every admission screen, the quota gate,
+  * the release ledger, split labels and the health monitors over ONE
+  * micro-batch stream in ONE `foreachBatch`, emitting ONE verdict row per
+  * document. This is the shape a production intake actually runs: one
+  * stream read, one checkpoint, one verdict table, not several sinks
+  * whose outputs someone joins later.
   *
-  * `(doc_id, is_near_dup, matched_doc, est_jaccard,
-  *   is_contaminated, n_shared_ngrams, admitted)`
-  *
-  * where `admitted = !is_near_dup && !is_contaminated` — the row a
-  * downstream writer filters on. This is the shape a production intake
-  * actually runs: one stream read, one checkpoint, one verdict table,
-  * not two sinks whose outputs someone joins later.
+  * Every entry point is a prefix of one chain of steps: the content
+  * screens ([[screenBatch]]: text near-dup + eval decontam; the private
+  * three-screen content step adds the IVF embedding screen), the quota
+  * gate, the release append, split labels, and the monitors — each sink
+  * runs its chain inside the one sink shell (empty-batch guard,
+  * `__batch` verdict write, cache release, index maintenance tick).
   *
   * Composition semantics (each deliberate, spec-pinned):
-  *  - both screens see the SAME raw batch — the near-dup screen is NOT
-  *    applied to decontam survivors or vice versa, so each verdict
-  *    column is independently meaningful and equals what the standalone
-  *    screen would say (StreamingIntakeSpec proves verdict equality);
-  *  - the band index ingests every screened doc, including contaminated
+  *  - every screen sees the SAME raw batch — no screen is applied to
+  *    another's survivors, so each verdict column is independently
+  *    meaningful and equals what the standalone screen would say
+  *    (StreamingIntakeSpec proves verdict equality);
+  *  - the history indexes ingest every screened doc, including rejected
   *    ones: dedup history must cover everything SEEN, so a later
   *    near-copy of a rejected page is still flagged (rejection is the
   *    `admitted` bit, not an index hole);
-  *  - replay idempotence composes: the index append and the verdict
-  *    write are both per-`__batch` dynamic overwrites, and the decontam
-  *    screen is stateless — re-running a crashed batchId converges to
-  *    the identical state, exactly-once effect from at-least-once runs.
+  *  - replay idempotence composes: every index append, ledger and
+  *    verdict write is a batch-scoped overwrite, and the decontam screen
+  *    is stateless — re-running a crashed batchId converges to the
+  *    identical state, exactly-once effect from at-least-once runs.
   *
   * Scale: the decontam side adds one bloom-prefiltered broadcast join to
   * the near-dup screen's band equi-join — nothing new shuffles with
-  * history size, and the two screens' jobs share the batch scan within
-  * the single foreachBatch.
+  * history size, and the screens' jobs share the batch scan within the
+  * single foreachBatch.
   */
 object StreamingIntake {
 
@@ -50,58 +51,51 @@ object StreamingIntake {
   }
 
   /** MULTIMODAL intake: all THREE admission screens over one
-    * `(doc_id, text, embedding)` batch — the text near-dup screen, the
-    * eval decontam screen, and the embedding SemDeDup screen
-    * ([[StreamingSemDedup]], catching paraphrases/re-encodes whose
-    * surface text shares no shingles) — emitting one verdict row per doc:
+    * `(doc_id, text, embedding)` batch — [[screenBatch]]'s two plus the
+    * embedding screen over the shared IVF postings index
+    * ([[StreamingIvf.screenBatch]], catching paraphrases/re-encodes whose
+    * surface text shares no shingles) — one verdict row per doc:
     *
     * `(doc_id, is_near_dup, matched_doc, est_jaccard, is_contaminated,
     *   n_shared_ngrams, is_sem_dup, matched_sem_doc, cosine, admitted)`
     *
-    * with `admitted` the conjunction of all three clean bits. The same
-    * composition contract as [[screenBatch]]: every screen sees the raw
-    * batch, both history indexes ingest every doc (including rejected
-    * ones), and all three writes are per-`__batch` dynamic overwrites so
-    * replay idempotence composes.
-    */
-  def screenBatchMultimodal(batch: DataFrame, indexDir: String, embIndexDir: String,
-      batchId: Long, screen: StreamingDecontam.Screen,
-      k: Int = 16, tau: Double = 0.40): DataFrame =
-    composeMultimodal(batch, indexDir, batchId, screen,
-      vecs => StreamingSemDedup.screenBatch(vecs, embIndexDir, batchId, k = k, tau = tau))
-
-  /** [[screenBatchMultimodal]] with the embedding screen running over the
-    * IVF postings layout ([[StreamingIvf.screenBatch]]) instead of
-    * [[StreamingSemDedup]]'s flat per-batch index: same verdict columns,
-    * same composition contracts, but the embedding history is the SAME
-    * versioned, `cell_id=X`-partitioned index ad-hoc probes and the
-    * manifest use — one at-rest artifact, not a screen-private copy — and
-    * the screen's history read prunes to the probed cells instead of
-    * scanning every batch partition.
+    * with `admitted` the conjunction of all three clean bits. The
+    * embedding history is the SAME versioned, `cell_id=X`-partitioned
+    * index ad-hoc probes and the manifest use; its history read prunes to
+    * the probed cells.
     */
   def screenBatchMultimodalIvf(batch: DataFrame, indexDir: String, embIndexDir: String,
       batchId: Long, screen: StreamingDecontam.Screen,
       k: Int = 16, tau: Double = 0.40, nprobe: Int = 2): DataFrame =
-    composeMultimodal(batch, indexDir, batchId, screen,
-      vecs => StreamingIvf.screenBatch(vecs, embIndexDir, batchId,
-        nprobe = nprobe, tau = tau, trainOnFirstBatch = true, k = k))
+    screenContent(batch, indexDir, embIndexDir, batchId, screen, k, tau, nprobe)._1
+      .withColumnRenamed("clean", "admitted")
 
-  /** Shared three-screen composition: text near-dup + eval decontam +
-    * a pluggable embedding screen (both implementations emit the same
-    * `(vec_id, is_near_dup, matched_vec, cosine)` contract).
+  /** The content step every three-screen entry point builds on: the
+    * per-doc verdicts of the text near-dup, eval decontam and IVF
+    * embedding screens joined on `doc_id` with their conjunction as
+    * `clean`, plus both near-dup screens' full verified pair lists
+    * (`doc_a, doc_b, …`; already materialized, so reading them re-runs
+    * no screen).
     */
-  private def composeMultimodal(batch: DataFrame, indexDir: String, batchId: Long,
-      screen: StreamingDecontam.Screen,
-      embScreen: DataFrame => DataFrame): DataFrame = {
-    val textVerdicts = screenBatch(batch.select("doc_id", "text"), indexDir, batchId, screen)
-    val semVerdicts = embScreen(
-        batch.select(col("doc_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("doc_id"), col("is_near_dup").as("is_sem_dup"),
-        col("matched_vec").as("matched_sem_doc"), col("cosine"))
-    textVerdicts.drop("admitted")
-      .join(semVerdicts, Seq("doc_id"))
-      .withColumn("admitted",
+  private def screenContent(batch: DataFrame, indexDir: String, embIndexDir: String,
+      batchId: Long, screen: StreamingDecontam.Screen,
+      k: Int, tau: Double, nprobe: Int): (DataFrame, DataFrame, DataFrame) = {
+    val textBatch = batch.select(col("doc_id"), col("text"))
+    val (nd, textPairs) =
+      StreamingNearDup.screenBatchWithPairs(textBatch, indexDir, batchId)
+    val dc = StreamingDecontam.screenBatch(textBatch, screen)
+    val (sem, embPairs) = StreamingIvf.screenBatchWithPairs(
+      batch.select(col("doc_id").as("vec_id"), col("embedding")),
+      embIndexDir, batchId, nprobe = nprobe, tau = tau,
+      trainOnFirstBatch = true, k = k)
+    // every screen emits exactly one row per input doc (spec-pinned), so
+    // the inner joins preserve the roster
+    val verdicts = nd.join(dc, Seq("doc_id"))
+      .join(sem.select(col("vec_id").as("doc_id"), col("is_near_dup").as("is_sem_dup"),
+        col("matched_vec").as("matched_sem_doc"), col("cosine")), Seq("doc_id"))
+      .withColumn("clean",
         !col("is_near_dup") && !col("is_contaminated") && !col("is_sem_dup"))
+    (verdicts, textPairs, embPairs)
   }
 
   /** The FULL intake: both content screens PLUS the temperature-quota
@@ -130,11 +124,11 @@ object StreamingIntake {
     gateWithQuota(content, batch, batchId, quotaDf, ledgerDir)
   }
 
-  /** The quota-gate composition step shared by [[screenBatchWithQuota]]
-    * and [[screenBatchFull]]: take per-doc content verdicts (with a
-    * `clean` bit), spend quota slots on clean docs only, write the
-    * batch's consumption ledger, and return the full verdict rows
-    * (`…, clean, in_quota, admitted`).
+  /** The quota-gate composition step shared by every quota-gated entry
+    * point: take per-doc content verdicts (with a `clean` bit), spend
+    * quota slots on clean docs only, write the batch's consumption
+    * ledger, and return the full verdict rows (`…, clean, in_quota,
+    * admitted`).
     */
   private def gateWithQuota(content: DataFrame, batch: DataFrame,
       batchId: Long, quotaDf: DataFrame, ledgerDir: String): DataFrame = {
@@ -172,49 +166,41 @@ object StreamingIntake {
     verdicts
   }
 
+  /** The release step: fingerprint the batch's admitted docs per
+    * language and append them to the release ledger
+    * ([[StreamingRelease]]) — so "what corpus have we admitted so far" is
+    * always one metadata-sized rollup away, with no corpus rescan. The
+    * admitted join rides the verdict cache [[gateWithQuota]] installs.
+    * Returns `verdicts` unchanged.
+    */
+  private def release(verdicts: DataFrame, batch: DataFrame,
+      releaseDir: String, batchId: Long): DataFrame = {
+    StreamingRelease.appendBatch(
+      verdicts.filter(col("admitted"))
+        .select(col("doc_id"), col("lang"))
+        .join(batch.select(col("doc_id"), col("text")), "doc_id"),
+      releaseDir, batchId)
+    verdicts
+  }
+
   /** THE FULL INTAKE: all three content screens (text near-dup, eval
-    * decontam, embedding SemDeDup) + the temperature-quota gate + the
+    * decontam, IVF embedding screen) + the temperature-quota gate + the
     * incremental release ledger, over one `(doc_id, text, lang,
     * embedding)` batch in one foreachBatch. The composition contracts
     * are the union of the parts': every screen sees the raw batch, both
     * history indexes ingest every doc, quota slots are spent only on
     * three-way-clean docs, the release fingerprints only admitted docs,
-    * and every write is batch-scoped so replay converges.
-    */
-  def screenBatchFull(batch: DataFrame, indexDir: String, embIndexDir: String,
-      batchId: Long, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
-      ledgerDir: String, releaseDir: String,
-      k: Int = 16, tau: Double = 0.40): DataFrame =
-    fullWith(batch, batchId, quotaDf, ledgerDir, releaseDir,
-      screenBatchMultimodal(
-        batch.select(col("doc_id"), col("text"), col("embedding")),
-        indexDir, embIndexDir, batchId, screen, k, tau))
-
-  /** [[screenBatchFull]] with the IVF-layout embedding screen
-    * ([[screenBatchMultimodalIvf]]): the full production intake where the
-    * embedding history index is the shared, prunable, compactable
-    * [[StreamingIvf]] artifact rather than a screen-private layout.
+    * and every write is batch-scoped so replay converges. The embedding
+    * history index is the shared, prunable, compactable [[StreamingIvf]]
+    * artifact rather than a screen-private layout.
     */
   def screenBatchFullIvf(batch: DataFrame, indexDir: String, embIndexDir: String,
       batchId: Long, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
       ledgerDir: String, releaseDir: String,
       k: Int = 16, tau: Double = 0.40, nprobe: Int = 2): DataFrame =
-    fullWith(batch, batchId, quotaDf, ledgerDir, releaseDir,
-      screenBatchMultimodalIvf(
-        batch.select(col("doc_id"), col("text"), col("embedding")),
-        indexDir, embIndexDir, batchId, screen, k, tau, nprobe))
-
-  /** Shared quota + release composition over three-screen content verdicts. */
-  private def fullWith(batch: DataFrame, batchId: Long, quotaDf: DataFrame,
-      ledgerDir: String, releaseDir: String, content0: DataFrame): DataFrame = {
-    val content = content0.withColumnRenamed("admitted", "clean")
-    val verdicts = gateWithQuota(content, batch, batchId, quotaDf, ledgerDir)
-    val admitted = verdicts.filter(col("admitted"))
-      .select(col("doc_id"), col("lang"))
-      .join(batch.select(col("doc_id"), col("text")), "doc_id")
-    StreamingRelease.appendBatch(admitted, releaseDir, batchId)
-    verdicts
-  }
+    release(gateWithQuota(
+      screenContent(batch, indexDir, embIndexDir, batchId, screen, k, tau, nprobe)._1,
+      batch, batchId, quotaDf, ledgerDir), batch, releaseDir, batchId)
 
   /** THE FULL INTAKE WITH SPLIT-AT-ADMISSION: the three content screens
     * (text near-dup + eval decontam + IVF embedding screen), the
@@ -245,75 +231,20 @@ object StreamingIntake {
       batchId: Long, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
       ledgerDir: String, releaseDir: String, labelDir: String,
       k: Int = 16, tau: Double = 0.40, nprobe: Int = 2): DataFrame = {
-    val textBatch = batch.select(col("doc_id"), col("text"))
-    val (nd, textPairs) =
-      StreamingNearDup.screenBatchWithPairs(textBatch, indexDir, batchId)
-    val dc = StreamingDecontam.screenBatch(textBatch, screen)
-    val (sem0, embPairs) = StreamingIvf.screenBatchWithPairs(
-      batch.select(col("doc_id").as("vec_id"), col("embedding")),
-      embIndexDir, batchId, nprobe = nprobe, tau = tau,
-      trainOnFirstBatch = true, k = k)
-    val sem = sem0.select(col("vec_id").as("doc_id"),
-      col("is_near_dup").as("is_sem_dup"),
-      col("matched_vec").as("matched_sem_doc"), col("cosine"))
-    val content = nd.join(dc, Seq("doc_id")).join(sem, Seq("doc_id"))
-      .withColumn("clean",
-        !col("is_near_dup") && !col("is_contaminated") && !col("is_sem_dup"))
-    val verdicts = gateWithQuota(content, batch, batchId, quotaDf, ledgerDir)
-    val admitted = verdicts.filter(col("admitted"))
-      .select(col("doc_id"), col("lang"))
-      .join(batch.select(col("doc_id"), col("text")), "doc_id")
-    StreamingRelease.appendBatch(admitted, releaseDir, batchId)
+    val (content, textPairs, embPairs) =
+      screenContent(batch, indexDir, embIndexDir, batchId, screen, k, tau, nprobe)
+    val verdicts = release(gateWithQuota(content, batch, batchId, quotaDf, ledgerDir),
+      batch, releaseDir, batchId)
     // split labels over the union match graph (both pair lists are
     // already-materialized checkpoints — no screen re-execution)
     val edges = textPairs.select(col("doc_a"), col("doc_b"))
       .unionByName(embPairs.select(col("doc_a"), col("doc_b")))
-    val labels = StreamingSplit.assignBatch(textBatch, edges, labelDir, batchId)
+    val labels = StreamingSplit.assignBatch(batch.select(col("doc_id"), col("text")),
+      edges, labelDir, batchId)
     val out = verdicts.join(labels, Seq("doc_id")).localCheckpoint(true)
     verdicts.unpersist()
     out
   }
-
-  /** Streaming sink for the split-labeled full intake: three screens +
-    * quota + release + split labels, one foreachBatch, one verdict table
-    * (per-`__batch` dynamic-overwrite partitions), running the composed
-    * embedding-index maintenance tick ([[StreamingIvf.maintenanceTick]]:
-    * consolidation + physical erasure of landed retractions + the
-    * optional auto-split policy) every `compactEvery` batches.
-    *
-    * Maintenance-vs-verdict contract: at `nprobe = k` (the lossless
-    * probe setting) arming the tick is verdict-invisible — purge only
-    * removes rows every screen already anti-joined away, and a split
-    * only refines WHICH cells candidates sit in, which full probing
-    * ignores. At smaller `nprobe` a split is a recall-shaping event
-    * (candidates follow the refined cells), never a precision one
-    * (every flagged cosine stays exact) — the same trade the index's
-    * ad-hoc probes make.
-    */
-  def sinkFullIvfSplit(docs: DataFrame, indexDir: String, embIndexDir: String,
-      screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
-      releaseDir: String, labelDir: String, verdictDir: String,
-      checkpointDir: String, k: Int = 16, tau: Double = 0.40, nprobe: Int = 2,
-      compactEvery: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow(),
-      splitHotAbovePpm: Long = 0L): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = screenBatchFullIvfSplit(batch, indexDir, embIndexDir,
-            batchId, screen, quotaDf, ledgerDir, releaseDir, labelDir,
-            k, tau, nprobe)
-          verdictWriter(verdictDir)(verdicts, batchId)
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            StreamingIvf.maintenanceTick(batch.sparkSession, embIndexDir,
-              batchId, splitHotAbovePpm = splitHotAbovePpm)
-            ()
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
 
   /** THE MONITORED FULL INTAKE: [[screenBatchFullIvfSplit]]'s three
     * screens + quota + release + split labels, PLUS the three health
@@ -326,7 +257,9 @@ object StreamingIntake {
     * checkpoint, one pass over the batch; every artifact batch-scoped,
     * so the whole composition replays idempotently. This is the
     * production shape: admission and observability are the SAME job, not
-    * a second pipeline reading the first one's output.
+    * a second pipeline reading the first one's output. Runs the
+    * embedding-index maintenance tick every `compactEvery` batches (see
+    * [[landBatch]]).
     */
   def sinkFullIvfSplitMonitored(docs: DataFrame, indexDir: String,
       embIndexDir: String, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
@@ -341,27 +274,15 @@ object StreamingIntake {
       cusumDirs: Option[(String, String)] = None,
       sampleDir: Option[String] = None,
       splitHotAbovePpm: Long = 0L): DataStreamWriter[Row] =
-    monitoredSink(docs, indexDir, embIndexDir, screen, quotaDf, ledgerDir,
-      releaseDir, labelDir, verdictDir,
-      // frozen-reference drift scoring, with the non-null-values guard of
-      // StreamingDrift.sink: a batch whose valueCol is entirely null would
-      // otherwise persist every reference bin at n_batch=0 — a spurious
-      // max-drift alert (the screenBatch full-outer shape; see its scaladoc)
-      scoreDrift = (lens, batchId) =>
-        if (!lens.filter(col("n_chars").isNotNull).isEmpty) {
-          val driftBins = StreamingDrift.screenBatch(lens, driftRef, "n_chars")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            driftBins.withColumn("__batch", lit(batchId))
-              .write.option("partitionOverwriteMode", "dynamic")
-              .mode("overwrite").partitionBy("__batch").parquet(driftBinsDir)
-            StreamingDrift.summarize(driftBins, driftThreshold)
-              .write.mode("overwrite").parquet(s"$driftSummaryDir/batch_id=$batchId")
-          } finally { driftBins.unpersist(); () }
-        },
-      kpiLedgerDir, kpiVerdictDir, profileStatsDir, profileBitmapDir,
-      profileDomain, checkpointDir, k, tau, nprobe, compactEvery, trigger,
-      cusumDirs, sampleDir, splitHotAbovePpm)
+    intakeSink(docs, verdictDir, checkpointDir, trigger,
+      embIndexDir, compactEvery, splitHotAbovePpm)(
+      screenBatchFullIvfSplit(_, indexDir, embIndexDir, _, screen, quotaDf,
+        ledgerDir, releaseDir, labelDir, k, tau, nprobe),
+      monitors((lens, batchId) => StreamingDrift.processBatch(lens.sparkSession,
+          lens, batchId, driftRef, "n_chars", driftBinsDir, driftSummaryDir,
+          driftThreshold),
+        kpiLedgerDir, kpiVerdictDir, profileStatsDir, profileBitmapDir,
+        profileDomain, cusumDirs, sampleDir))
 
   /** [[sinkFullIvfSplitMonitored]] with the RE-FREEZING drift reference
     * ([[StreamingDrift.processBatchRefreshing]]): each batch scores
@@ -384,114 +305,68 @@ object StreamingIntake {
       cusumDirs: Option[(String, String)] = None,
       sampleDir: Option[String] = None,
       splitHotAbovePpm: Long = 0L): DataStreamWriter[Row] =
-    monitoredSink(docs, indexDir, embIndexDir, screen, quotaDf, ledgerDir,
-      releaseDir, labelDir, verdictDir,
-      scoreDrift = (lens, batchId) =>
-        StreamingDrift.processBatchRefreshing(lens.sparkSession, lens, batchId,
-          driftRefStoreDir, "n_chars", driftBinsDir, driftSummaryDir,
-          driftThreshold),
-      kpiLedgerDir, kpiVerdictDir, profileStatsDir, profileBitmapDir,
-      profileDomain, checkpointDir, k, tau, nprobe, compactEvery, trigger,
-      cusumDirs, sampleDir, splitHotAbovePpm)
+    intakeSink(docs, verdictDir, checkpointDir, trigger,
+      embIndexDir, compactEvery, splitHotAbovePpm)(
+      screenBatchFullIvfSplit(_, indexDir, embIndexDir, _, screen, quotaDf,
+        ledgerDir, releaseDir, labelDir, k, tau, nprobe),
+      monitors((lens, batchId) => StreamingDrift.processBatchRefreshing(
+          lens.sparkSession, lens, batchId, driftRefStoreDir, "n_chars",
+          driftBinsDir, driftSummaryDir, driftThreshold),
+        kpiLedgerDir, kpiVerdictDir, profileStatsDir, profileBitmapDir,
+        profileDomain, cusumDirs, sampleDir))
 
-  /** The shared monitored-intake body — drift scoring is the one policy
-    * choice, injected by the two public variants above.
+  /** The monitored intake's post-verdict steps (the sink shell's
+    * `after`) — drift scoring is the one policy choice, injected by the
+    * two public variants above.
     */
-  private def monitoredSink(docs: DataFrame, indexDir: String,
-      embIndexDir: String, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
-      ledgerDir: String, releaseDir: String, labelDir: String, verdictDir: String,
-      scoreDrift: (DataFrame, Long) => Unit,
-      kpiLedgerDir: String, kpiVerdictDir: String,
-      profileStatsDir: String, profileBitmapDir: String, profileDomain: Int,
-      checkpointDir: String, k: Int, tau: Double, nprobe: Int,
-      compactEvery: Int, trigger: Trigger,
-      cusumDirs: Option[(String, String)],
-      sampleDir: Option[String],
-      splitHotAbovePpm: Long): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val verdicts = screenBatchFullIvfSplit(batch, indexDir, embIndexDir,
-            batchId, screen, quotaDf, ledgerDir, releaseDir, labelDir,
-            k, tau, nprobe)
-          verdictWriter(verdictDir)(verdicts, batchId)
-          // live PPS sample of what was ADMITTED (lang = the stratum): the
-          // maintained sample always equals a batch t38 rerun over the
-          // admitted history — replay-stable because the admitted set per
-          // batch is (verdict idempotence) and the scoring is per-payload
-          sampleDir.foreach { sd =>
-            val admittedDocs = verdicts.filter(col("admitted"))
-              .select(col("doc_id"), col("lang").as("source"))
-              .join(batch.select(col("doc_id"), col("text")), "doc_id")
-              .select(col("doc_id"), col("text"), col("source"))
-            StreamingSampler.processBatch(spark, admittedDocs, batchId, sd)
-          }
-          // monitors see the RAW batch (admission must not bias the
-          // health signals), except the KPI which measures what was
-          // actually ADMITTED — the quantity downstream consumes
-          val lens = batch.select(col("doc_id"),
-            length(col("text")).cast("long").as("n_chars"))
-          scoreDrift(lens, batchId)
-          val admittedChars = verdicts.filter(col("admitted"))
-            .select(col("doc_id"))
-            .join(lens, "doc_id")
-          StreamingAnomaly.processBatch(spark, admittedChars, batchId,
-            "n_chars", kpiLedgerDir, kpiVerdictDir)
-          // the triad's third leg: two-sided CUSUM on the same admitted
-          // KPI — the sustained-small-shift shape (a scraper that starts
-          // truncating) that the single-batch z above cannot see
-          cusumDirs.foreach { case (cl, cv) =>
-            StreamingCusum.processBatch(spark, admittedChars, batchId,
-              "n_chars", cl, cv)
-          }
-          val (stats, bitmap) = StreamingProfile.profileBatch(
-            lens, Seq("n_chars"), "doc_id", profileDomain)
-          Seq(stats -> profileStatsDir, bitmap -> profileBitmapDir).foreach {
-            case (df, dir) =>
-              df.withColumn("__batch", lit(batchId))
-                .write.option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite").partitionBy("__batch").parquet(dir)
-          }
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            // the COMPOSED tick: consolidation + physical erasure of any
-            // retractions landed since the last cadence + (when armed)
-            // the hot-cell auto-split — admission and index maintenance
-            // are the SAME job, like admission and observability above
-            StreamingIvf.maintenanceTick(spark, embIndexDir, batchId,
-              splitHotAbovePpm = splitHotAbovePpm)
-            ()
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+  private def monitors(scoreDrift: (DataFrame, Long) => Unit,
+      kpiLedgerDir: String, kpiVerdictDir: String, profileStatsDir: String,
+      profileBitmapDir: String, profileDomain: Int,
+      cusumDirs: Option[(String, String)], sampleDir: Option[String])(
+      batch: DataFrame, verdicts: DataFrame, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    // live PPS sample of what was ADMITTED (lang = the stratum): the
+    // maintained sample always equals a batch t38 rerun over the
+    // admitted history — replay-stable because the admitted set per
+    // batch is (verdict idempotence) and the scoring is per-payload
+    sampleDir.foreach { sd =>
+      val admittedDocs = verdicts.filter(col("admitted"))
+        .select(col("doc_id"), col("lang").as("source"))
+        .join(batch.select(col("doc_id"), col("text")), "doc_id")
+        .select(col("doc_id"), col("text"), col("source"))
+      StreamingSampler.processBatch(spark, admittedDocs, batchId, sd)
+    }
+    // monitors see the RAW batch (admission must not bias the
+    // health signals), except the KPI which measures what was
+    // actually ADMITTED — the quantity downstream consumes
+    val lens = batch.select(col("doc_id"),
+      length(col("text")).cast("long").as("n_chars"))
+    scoreDrift(lens, batchId)
+    val admittedChars = verdicts.filter(col("admitted"))
+      .select(col("doc_id"))
+      .join(lens, "doc_id")
+    StreamingAnomaly.processBatch(spark, admittedChars, batchId,
+      "n_chars", kpiLedgerDir, kpiVerdictDir)
+    // the triad's third leg: two-sided CUSUM on the same admitted
+    // KPI — the sustained-small-shift shape (a scraper that starts
+    // truncating) that the single-batch z above cannot see
+    cusumDirs.foreach { case (cl, cv) =>
+      StreamingCusum.processBatch(spark, admittedChars, batchId,
+        "n_chars", cl, cv)
+    }
+    val (stats, bitmap) = StreamingProfile.profileBatch(
+      lens, Seq("n_chars"), "doc_id", profileDomain)
+    Seq(stats -> profileStatsDir, bitmap -> profileBitmapDir).foreach {
+      case (df, dir) =>
+        df.withColumn("__batch", lit(batchId))
+          .write.option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").partitionBy("__batch").parquet(dir)
+    }
+  }
 
-  /** Streaming sink for the full intake (3 screens + quota + release). */
-  def sinkFull(docs: DataFrame, indexDir: String, embIndexDir: String,
-      screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
-      releaseDir: String, verdictDir: String, checkpointDir: String,
-      k: Int = 16, tau: Double = 0.40,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = screenBatchFull(batch, indexDir, embIndexDir,
-            batchId, screen, quotaDf, ledgerDir, releaseDir, k, tau)
-          try verdictWriter(verdictDir)(verdicts, batchId)
-          finally verdicts.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-
-  /** Streaming sink for the IVF-indexed full intake, running the composed
-    * embedding-index maintenance tick every `compactEvery` batches
-    * ([[StreamingIvf.maintenanceTick]] — consolidation + physical erasure
-    * of landed retractions + optional auto-split; safe concurrently with
-    * probes).
+  /** Streaming sink for the IVF-indexed full intake
+    * ([[screenBatchFullIvf]]), running the embedding-index maintenance
+    * tick every `compactEvery` batches (see [[landBatch]]).
     */
   def sinkFullIvf(docs: DataFrame, indexDir: String, embIndexDir: String,
       screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
@@ -499,60 +374,19 @@ object StreamingIntake {
       k: Int = 16, tau: Double = 0.40, nprobe: Int = 2, compactEvery: Int = 8,
       trigger: Trigger = Trigger.AvailableNow(),
       splitHotAbovePpm: Long = 0L): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = screenBatchFullIvf(batch, indexDir, embIndexDir,
-            batchId, screen, quotaDf, ledgerDir, releaseDir, k, tau, nprobe)
-          try verdictWriter(verdictDir)(verdicts, batchId)
-          finally verdicts.unpersist()
-          if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-            StreamingIvf.maintenanceTick(batch.sparkSession, embIndexDir,
-              batchId, splitHotAbovePpm = splitHotAbovePpm)
-            ()
-          }
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+    intakeSink(docs, verdictDir, checkpointDir, trigger,
+      embIndexDir, compactEvery, splitHotAbovePpm)(
+      (batch, batchId) => screenBatchFullIvf(batch, indexDir, embIndexDir,
+        batchId, screen, quotaDf, ledgerDir, releaseDir, k, tau, nprobe))
 
-  /** The full intake PLUS the incremental release cut: after the quota
-    * gate, the batch's admitted docs are fingerprinted per language and
-    * appended to the release ledger ([[StreamingRelease]]) — so "what
-    * corpus have we admitted so far" is always one metadata-sized rollup
-    * away, with no corpus rescan. The admitted join rides the verdict
-    * cache [[screenBatchWithQuota]] installs.
+  /** [[screenBatchWithQuota]] plus the [[release]] step: the batch's
+    * admitted docs are appended to the incremental release ledger.
     */
   def screenBatchWithQuotaAndRelease(batch: DataFrame, indexDir: String,
       batchId: Long, screen: StreamingDecontam.Screen, quotaDf: DataFrame,
-      ledgerDir: String, releaseDir: String): DataFrame = {
-    val verdicts = screenBatchWithQuota(batch, indexDir, batchId, screen,
-      quotaDf, ledgerDir)
-    val admitted = verdicts.filter(col("admitted"))
-      .select(col("doc_id"), col("lang"))
-      .join(batch.select(col("doc_id"), col("text")), "doc_id")
-    StreamingRelease.appendBatch(admitted, releaseDir, batchId)
-    verdicts
-  }
-
-  /** Streaming sink for the full intake + release ledger. */
-  def sinkWithQuotaAndRelease(docs: DataFrame, indexDir: String,
-      screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
-      releaseDir: String, verdictDir: String, checkpointDir: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val verdicts = screenBatchWithQuotaAndRelease(batch, indexDir,
-            batchId, screen, quotaDf, ledgerDir, releaseDir)
-          try verdictWriter(verdictDir)(verdicts, batchId)
-          finally verdicts.unpersist()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+      ledgerDir: String, releaseDir: String): DataFrame =
+    release(screenBatchWithQuota(batch, indexDir, batchId, screen, quotaDf, ledgerDir),
+      batch, releaseDir, batchId)
 
   /** One micro-batch of the full intake (content screens + quota):
     * screen, gate, land ledger row + verdict partition. The
@@ -562,35 +396,16 @@ object StreamingIntake {
   def processBatchWithQuota(batch: DataFrame, batchId: Long, indexDir: String,
       screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
       verdictDir: String): Unit =
-    if (!batch.isEmpty) {
-      val verdicts =
-        screenBatchWithQuota(batch, indexDir, batchId, screen, quotaDf, ledgerDir)
-      try verdictWriter(verdictDir)(verdicts, batchId)
-      finally verdicts.unpersist()
-    }
+    landBatch(batch, batchId, verdictDir)(
+      screenBatchWithQuota(_, indexDir, _, screen, quotaDf, ledgerDir))
 
   /** Streaming sink for the full intake (content screens + quota). */
   def sinkWithQuota(docs: DataFrame, indexDir: String,
       screen: StreamingDecontam.Screen, quotaDf: DataFrame, ledgerDir: String,
       verdictDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchWithQuota(batch, batchId, indexDir, screen, quotaDf,
-          ledgerDir, verdictDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
-
-  private def verdictWriter(verdictDir: String)(verdicts: DataFrame, batchId: Long): Unit =
-    verdicts
-      .withColumn("__batch", lit(batchId))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy("__batch")
-      .parquet(verdictDir)
+    intakeSink(docs, verdictDir, checkpointDir, trigger)(
+      screenBatchWithQuota(_, indexDir, _, screen, quotaDf, ledgerDir))
 
   /** Streaming sink: one foreachBatch, both screens, one verdict table
     * (per-`__batch` dynamic-overwrite partitions, like each screen's own
@@ -599,28 +414,55 @@ object StreamingIntake {
   def sink(docs: DataFrame, indexDir: String, screen: StreamingDecontam.Screen,
       verdictDir: String, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
+    intakeSink(docs, verdictDir, checkpointDir, trigger)(
+      screenBatch(_, indexDir, _, screen))
+
+  /** The one sink shell behind every intake sink: each batch runs [[landBatch]]. */
+  private def intakeSink(docs: DataFrame, verdictDir: String,
+      checkpointDir: String, trigger: Trigger, embIndexDir: String = "",
+      compactEvery: Int = 0, splitHotAbovePpm: Long = 0L)(
+      screen: (DataFrame, Long) => DataFrame,
+      after: (DataFrame, DataFrame, Long) => Unit = (_, _, _) => ()
+  ): DataStreamWriter[Row] =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        verdictWriter(verdictDir)(screenBatch(batch, indexDir, batchId, screen), batchId)
+        landBatch(batch, batchId, verdictDir, embIndexDir, compactEvery,
+          splitHotAbovePpm)(screen, after)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .outputMode("append")
 
-  /** Streaming sink for the multimodal intake: one foreachBatch, three
-    * screens, one verdict table.
+  /** One batch of the sink shell. An empty batch writes nothing (no
+    * index, ledger or verdict partition). Otherwise `screen` computes the
+    * verdicts, they land as the batch's `__batch` dynamic-overwrite
+    * partition, `after` runs the post-verdict steps, the verdict cache is
+    * released, and every `compactEvery` batches (0 = never) the
+    * embedding index under `embIndexDir` runs its composed maintenance
+    * tick ([[StreamingIvf.maintenanceTick]]: consolidation + physical
+    * erasure of landed retractions + the optional auto-split; safe
+    * concurrently with probes). At `nprobe = k` (lossless probing) the
+    * tick is verdict-invisible — purge only removes rows every screen
+    * already anti-joined away, and a split only refines WHICH cells
+    * candidates sit in. At smaller `nprobe` a split shapes recall, never
+    * precision (every flagged cosine stays exact).
     */
-  def sinkMultimodal(docs: DataFrame, indexDir: String, embIndexDir: String,
-      screen: StreamingDecontam.Screen, verdictDir: String, checkpointDir: String,
-      k: Int = 16, tau: Double = 0.40,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[Row] =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        verdictWriter(verdictDir)(
-          screenBatchMultimodal(batch, indexDir, embIndexDir, batchId, screen, k, tau),
-          batchId)
+  private def landBatch(batch: DataFrame, batchId: Long, verdictDir: String,
+      embIndexDir: String = "", compactEvery: Int = 0, splitHotAbovePpm: Long = 0L)(
+      screen: (DataFrame, Long) => DataFrame,
+      after: (DataFrame, DataFrame, Long) => Unit = (_, _, _) => ()): Unit =
+    if (!batch.isEmpty) {
+      val verdicts = screen(batch, batchId)
+      try {
+        verdicts.withColumn("__batch", lit(batchId))
+          .write.option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").partitionBy("__batch").parquet(verdictDir)
+        after(batch, verdicts, batchId)
+      } finally { verdicts.unpersist(); () }
+      if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
+        StreamingIvf.maintenanceTick(batch.sparkSession, embIndexDir, batchId,
+          splitHotAbovePpm = splitHotAbovePpm)
+        ()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .outputMode("append")
+    }
 }

@@ -38,6 +38,16 @@ class BitmapDistinctSpec extends AnyFunSuite with SparkTestKit {
     assert(banded == exact)
   }
 
+  test("INT keys are cast to BIGINT; a BIGINT key's plan carries no cast") {
+    assert(spark.sql("SELECT bitmap_distinct(v, 16) FROM VALUES (1), (3), (3) AS t(v)")
+      .as[Long].head() == 2L)
+    assert(spark.sql("SELECT bitmap_or_count(b) FROM" +
+      " (SELECT bitmap_bytes(v, 16) AS b FROM VALUES (1), (3) AS t(v))").as[Long].head() == 2L)
+    val plan = spark.sql("SELECT bitmap_distinct(v, 16) FROM VALUES (1L), (3L) AS t(v)")
+      .queryExecution.analyzed.toString
+    assert(!plan.toLowerCase.contains("cast("), plan)
+  }
+
   test("out-of-domain keys fail loudly instead of silently dropping") {
     val e = intercept[Exception] {
       distinctOf(Seq(5L, 99L).toDF("k"), domain = 10)

@@ -99,6 +99,14 @@ class GraftInstallSpec extends AnyFunSuite with SparkTestKit {
     assert(p.contains("TopKPerGroup"), p)
   }
 
+  test("bloom_might_contain rejects a non-foldable bloom at analysis") {
+    val e = intercept[Exception] {
+      spark.sql(s"SELECT bloom_might_contain((SELECT X'$bloomHex'), xxhash64(2L))")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("BloomFilters.bloomLiteral")), e)
+  }
+
   test("every catalog function has a probe") {
     assert(Graft.functions.map(_._1.funcName).toSet == probes.keySet)
   }

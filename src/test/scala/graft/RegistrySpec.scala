@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit, LateralJoin,
+  LocalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -110,9 +112,32 @@ class RegistrySpec extends AnyFunSuite with SparkTestKit {
       s"decimal-typed output columns in gated queries: ${offenders.mkString(", ")}")
   }
 
+  /** True when a LATERAL subquery body (at any nesting depth) holds both
+    * an Aggregate and a sort-limit: Spark 4.1.2 silently returns zero
+    * rows for that shape, while either half alone decorrelates correctly.
+    */
+  private def lateralAggSortLimit(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries { case j: LateralJoin => j.right.plan }.exists { body =>
+      body.exists(_.isInstanceOf[Aggregate]) && body.exists(_.isInstanceOf[Sort]) &&
+        body.exists(n => n.isInstanceOf[GlobalLimit] || n.isInstanceOf[LocalLimit])
+    }
+
+  test("the LATERAL aggregate + sort-limit detector fires on that shape only") {
+    def lateral(body: String) = spark.sql("SELECT o.id, t.* FROM VALUES (1), (2) AS o(id), " +
+      s"LATERAL ($body) t").queryExecution.analyzed
+    val src = "FROM VALUES (1, 'a'), (1, 'b'), (2, 'a') AS v(id, k) WHERE v.id = o.id"
+    assert(lateralAggSortLimit(lateral(
+      s"SELECT k, count(*) AS n $src GROUP BY k ORDER BY n DESC, k LIMIT 1")))
+    assert(!lateralAggSortLimit(lateral(s"SELECT k $src ORDER BY k LIMIT 1")))
+    assert(!lateralAggSortLimit(lateral(s"SELECT k, count(*) AS n $src GROUP BY k")))
+  }
+
   for (q <- SparkEntry.registry) {
     test(s"${q.name} runs and is deterministic at sf0.001") {
       val df1 = q.run(spark, sfDir)
+      assert(!lateralAggSortLimit(df1.queryExecution.analyzed),
+        s"${q.name} has a LATERAL subquery with both GROUP BY and ORDER BY … LIMIT," +
+          " which Spark 4.1.2 answers with zero rows")
       val n1 = df1.count()
       val n2 = q.run(spark, sfDir).count()
       assert(n1 == n2, s"${q.name} row count not stable: $n1 vs $n2")

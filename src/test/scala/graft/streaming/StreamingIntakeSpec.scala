@@ -111,88 +111,13 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
       "replay must dynamic-overwrite its own partition, not append")
   }
 
-  // embedding fixtures for the multimodal intake: same family scheme as
+  // embedding fixtures for the three-screen intake: same family scheme as
   // StreamingSemDedupSpec — near-orthogonal families, near-copies ≈ 0.999
   private def emb(f: Int): Array[Float] = {
     val v = Array.fill(8)(0.0f); v(f % 8) = 10.0f; v((f + 3) % 8) += 1.0f; v
   }
   private def embCopy(f: Int): Array[Float] = {
     val v = emb(f); v((f + 5) % 8) += 0.3f; v
-  }
-
-  test("multimodal intake: three screens, one verdict row, each column equals its standalone screen") {
-    val screen = StreamingDecontam.prepare(evalDocs)
-    val indexDir = tmp("mm-index") + "/index"
-    val embIndexDir = tmp("mm-emb") + "/index"
-    val tau = 0.9
-
-    // batch 1 — each rejection reason hit by a DIFFERENT doc:
-    //   0: clean everywhere → admitted
-    //   1: TEXT near-copy of 0 (fresh embedding) → only is_near_dup
-    //   2: fresh text, EMBEDDING near-copy of 0 → only is_sem_dup
-    //   3: verbatim EVAL text (fresh embedding) → only is_contaminated
-    val b1 = Seq(
-      (0L, sentence(20), emb(0)),
-      (1L, mutate(sentence(20)), emb(1)),
-      (2L, sentence(21), embCopy(0)),
-      (3L, sentence(1), emb(3)))
-    // batch 2 — cross-batch semantic copy of doc 1's embedding + a clean doc
-    val b2 = Seq(
-      (10L, sentence(22), embCopy(1)),
-      (11L, sentence(23), emb(6)))
-
-    def df(rows: Seq[(Long, String, Array[Float])]) =
-      rows.toDF("doc_id", "text", "embedding")
-
-    val v1 = StreamingIntake.screenBatchMultimodal(df(b1), indexDir, embIndexDir, 0L,
-      screen, k = 3, tau = tau)
-    val v2 = StreamingIntake.screenBatchMultimodal(df(b2), indexDir, embIndexDir, 1L,
-      screen, k = 3, tau = tau)
-    val v = (v1.collect() ++ v2.collect()).map { r =>
-      r.getAs[Long]("doc_id") -> ((r.getAs[Boolean]("is_near_dup"),
-        r.getAs[Boolean]("is_contaminated"), r.getAs[Boolean]("is_sem_dup"),
-        r.getAs[Boolean]("admitted")))
-    }.toMap
-
-    assert(v.keySet == (b1 ++ b2).map(_._1).toSet)
-    assert(v(0L) == ((false, false, false, true)))
-    assert(v(1L) == ((true, false, false, false)), s"text near-copy: ${v(1L)}")
-    assert(v(2L) == ((false, false, true, false)), s"embedding near-copy: ${v(2L)}")
-    assert(v(3L) == ((false, true, false, false)), s"eval copy: ${v(3L)}")
-    assert(v(10L) == ((false, false, true, false)), s"cross-batch sem copy: ${v(10L)}")
-    assert(v(11L) == ((false, false, false, true)))
-    v.foreach { case (id, (nd, dc, sd, adm)) =>
-      assert(adm == (!nd && !dc && !sd), s"doc $id conjunction broken")
-    }
-
-    // the semantic column equals the standalone embedding screen run into
-    // a SEPARATE index batch-by-batch
-    val soloEmb = tmp("mm-solo") + "/index"
-    val solo = Seq(b1 -> 0L, b2 -> 1L).map { case (rows, bid) =>
-      StreamingSemDedup.screenBatch(
-        df(rows).select($"doc_id".as("vec_id"), $"embedding"), soloEmb, bid, k = 3, tau = tau)
-    }.reduce(_ unionByName _)
-      .select($"vec_id", $"is_near_dup", $"matched_vec")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getBoolean(1), if (r.isNullAt(2)) -1L else r.getLong(2)))).toMap
-    val composedSem = (v1.collect() ++ v2.collect()).map { r =>
-      r.getAs[Long]("doc_id") -> ((r.getAs[Boolean]("is_sem_dup"),
-        if (r.isNullAt(r.fieldIndex("matched_sem_doc"))) -1L
-        else r.getAs[Long]("matched_sem_doc")))
-    }.toMap
-    assert(composedSem == solo,
-      s"composition changed the semantic verdict:\n composed=$composedSem\n solo=$solo")
-
-    // replay idempotence across BOTH indexes
-    val beforeText = spark.read.parquet(indexDir).count()
-    val beforeEmb = spark.read.parquet(embIndexDir).count()
-    val again = StreamingIntake.screenBatchMultimodal(df(b2), indexDir, embIndexDir, 1L,
-      screen, k = 3, tau = tau).collect().map { r =>
-      r.getAs[Long]("doc_id") -> r.getAs[Boolean]("admitted")
-    }.toMap
-    assert(again == Map(10L -> false, 11L -> true), s"replay drifted: $again")
-    assert(spark.read.parquet(indexDir).count() == beforeText)
-    assert(spark.read.parquet(embIndexDir).count() == beforeEmb)
   }
 
   test("quota composition: rejected docs never burn quota; ledger spans batches; replay converges") {
@@ -243,68 +168,6 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
     assert(ledger == Map("en" -> 2L), s"ledger after replay: $ledger")
   }
 
-  test("FULL intake: three screens + quota + release in one pass, all contracts hold") {
-    val screen = StreamingDecontam.prepare(evalDocs)
-    val indexDir = tmp("full-index") + "/index"
-    val embIndexDir = tmp("full-emb") + "/index"
-    val ledgerDir = tmp("full-ledger"); val releaseDir = tmp("full-release")
-    // en quota 2 binds; de quota generous
-    val quota = Seq(("en", 2L), ("de", 10L)).toDF("lang", "quota")
-
-    //   0: clean en  → admitted (slot 1)
-    //   1: clean en  → admitted (slot 2)
-    //   2: TEXT near-copy of 0 → rejected, must NOT burn an en slot
-    //   3: eval copy → rejected (contaminated)
-    //   4: EMBEDDING near-copy of 0 → rejected (sem dup)
-    //   5: clean de  → admitted
-    val b1 = Seq(
-      (0L, sentence(30), "en", emb(0)),
-      (1L, sentence(31), "en", emb(1)),
-      (2L, mutate(sentence(30)), "en", emb(2)),
-      (3L, sentence(1), "en", emb(3)),
-      (4L, sentence(32), "en", embCopy(0)),
-      (5L, sentence(33), "de", emb(4)))
-    // batch 2: one more clean en doc — quota exhausted, clean but cut
-    val b2 = Seq((10L, sentence(34), "en", emb(5)))
-    def df(rows: Seq[(Long, String, String, Array[Float])]) =
-      rows.toDF("doc_id", "text", "lang", "embedding")
-
-    val v1 = StreamingIntake.screenBatchFull(df(b1), indexDir, embIndexDir, 0L,
-      screen, quota, ledgerDir, releaseDir, k = 3, tau = 0.9)
-    val v2 = StreamingIntake.screenBatchFull(df(b2), indexDir, embIndexDir, 1L,
-      screen, quota, ledgerDir, releaseDir, k = 3, tau = 0.9)
-    val v = (v1.collect() ++ v2.collect()).map { r =>
-      r.getAs[Long]("doc_id") -> ((r.getAs[Boolean]("clean"),
-        r.getAs[Boolean]("in_quota"), r.getAs[Boolean]("admitted")))
-    }.toMap
-    assert(v(0L) == ((true, true, true)))
-    assert(v(1L) == ((true, true, true)))
-    assert(v(2L)._1 == false && v(2L)._3 == false)
-    assert(v(3L)._1 == false && v(4L)._1 == false)
-    assert(v(5L) == ((true, true, true)))
-    // batch 2's clean en doc finds the quota spent — clean but not admitted
-    assert(v(10L) == ((true, false, false)), s"quota must bind: ${v(10L)}")
-
-    // release ledger == one-shot cut over exactly the admitted docs
-    val admitted = df(b1 ++ b2).filter(col("doc_id").isin(0L, 1L, 5L))
-      .select(col("doc_id"), col("lang"), col("text"))
-    val folded = StreamingRelease.currentRelease(spark, releaseDir)
-      .collect().map(_.mkString("|")).sorted.toSeq
-    val oneShot = StreamingRelease.releaseBatch(admitted)
-      .collect().map(_.mkString("|")).sorted.toSeq
-    assert(folded == oneShot)
-
-    // replay of batch 0 converges everywhere (verdicts, ledger, release)
-    val r = StreamingIntake.screenBatchFull(df(b1), indexDir, embIndexDir, 0L,
-      screen, quota, ledgerDir, releaseDir, k = 3, tau = 0.9)
-    assert(r.collect().map(_.mkString("|")).sorted.toSeq ==
-      v1.collect().map(_.mkString("|")).sorted.toSeq)
-    r.unpersist()
-    assert(StreamingRelease.currentRelease(spark, releaseDir)
-      .collect().map(_.mkString("|")).sorted.toSeq == folded)
-    v1.unpersist(); v2.unpersist()
-  }
-
   test("FULL intake over the IVF embedding index: same contracts, shared prunable index") {
     val screen = StreamingDecontam.prepare(evalDocs)
     val indexDir = tmp("ivf-index") + "/index"
@@ -312,7 +175,12 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
     val ledgerDir = tmp("ivf-ledger"); val releaseDir = tmp("ivf-release")
     val quota = Seq(("en", 2L), ("de", 10L)).toDF("lang", "quota")
 
-    // same engineered shape as the SemDedup-backed FULL intake test
+    // each rejection reason hit by a DIFFERENT doc:
+    //   0, 1: clean en → admitted (both en slots)
+    //   2: TEXT near-copy of 0 → only is_near_dup, must NOT burn an en slot
+    //   3: verbatim EVAL text → only is_contaminated
+    //   4: EMBEDDING near-copy of 0 → only is_sem_dup
+    //   5: clean de → admitted
     val b1 = Seq(
       (0L, sentence(40), "en", emb(0)),
       (1L, sentence(41), "en", emb(1)),
@@ -320,7 +188,9 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
       (3L, sentence(1), "en", emb(3)),
       (4L, sentence(42), "en", embCopy(0)),
       (5L, sentence(43), "de", emb(4)))
-    val b2 = Seq((10L, sentence(44), "en", embCopy(1)))
+    // batch 2: a CROSS-BATCH embedding copy of doc 1, and a clean en doc
+    // that finds the en quota spent (clean ∧ ¬in_quota)
+    val b2 = Seq((10L, sentence(44), "en", embCopy(1)), (11L, sentence(45), "en", emb(5)))
     def df(rows: Seq[(Long, String, String, Array[Float])]) =
       rows.toDF("doc_id", "text", "lang", "embedding")
 
@@ -331,17 +201,24 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
     val v = (v1.collect() ++ v2.collect()).map { r =>
       r.getAs[Long]("doc_id") -> ((r.getAs[Boolean]("is_near_dup"),
         r.getAs[Boolean]("is_contaminated"), r.getAs[Boolean]("is_sem_dup"),
-        r.getAs[Boolean]("clean"), r.getAs[Boolean]("admitted")))
+        r.getAs[Boolean]("clean"), r.getAs[Boolean]("in_quota"),
+        r.getAs[Boolean]("admitted")))
     }.toMap
-    assert(v(0L) == ((false, false, false, true, true)))
-    assert(v(1L) == ((false, false, false, true, true)))
-    assert(v(2L)._1 && !v(2L)._5, s"text near-copy: ${v(2L)}")
-    assert(v(3L)._2 && !v(3L)._5, s"eval copy: ${v(3L)}")
-    assert(v(4L)._3 && !v(4L)._5, s"embedding near-copy via IVF screen: ${v(4L)}")
-    assert(v(5L) == ((false, false, false, true, true)))
-    // batch 2's CROSS-BATCH embedding copy is caught by the persisted
-    // index (and the en quota is irrelevant — it's not clean)
-    assert(v(10L)._3 && !v(10L)._5, s"cross-batch sem copy via IVF history: ${v(10L)}")
+    assert(v.keySet == (b1 ++ b2).map(_._1).toSet)
+    assert(v(0L) == ((false, false, false, true, true, true)))
+    assert(v(1L) == ((false, false, false, true, true, true)))
+    assert(v(2L) == ((true, false, false, false, false, false)), s"text near-copy: ${v(2L)}")
+    assert(v(3L) == ((false, true, false, false, false, false)), s"eval copy: ${v(3L)}")
+    assert(v(4L) == ((false, false, true, false, false, false)),
+      s"embedding near-copy via IVF screen: ${v(4L)}")
+    assert(v(5L) == ((false, false, false, true, true, true)))
+    // batch 2's CROSS-BATCH embedding copy is caught by the persisted index
+    assert(v(10L) == ((false, false, true, false, false, false)),
+      s"cross-batch sem copy via IVF history: ${v(10L)}")
+    assert(v(11L) == ((false, false, false, true, false, false)), s"quota must bind: ${v(11L)}")
+    v.foreach { case (id, (nd, dc, sd, clean, inQ, adm)) =>
+      assert(clean == (!nd && !dc && !sd) && adm == (clean && inQ), s"doc $id conjunction broken")
+    }
 
     // the semantic column equals the standalone IVF screen batch-by-batch
     // into a SEPARATE index (same frozen-on-first-batch codebook — the
@@ -380,13 +257,31 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
       .collect().map(_.getAs[Long]("neighbor_id")).toSeq
     assert(hit == Seq(4L), s"ad-hoc probe against the intake's index: $hit")
 
-    // replay of batch 0 converges (verdicts + ledger + postings)
+    // release ledger == one-shot cut over exactly the admitted docs
+    def release = StreamingRelease.currentRelease(spark, releaseDir)
+      .collect().map(_.mkString("|")).sorted.toSeq
+    val folded = release
+    assert(folded == StreamingRelease.releaseBatch(
+      df(b1).filter($"doc_id".isin(0L, 1L, 5L)).select($"doc_id", $"lang", $"text"))
+      .collect().map(_.mkString("|")).sorted.toSeq)
+
+    // replay of batch 0 converges (verdicts + ledger + release + both
+    // indexes); the multimodal entry point is the same content step, so
+    // replaying through it yields v1's screen columns with admitted = clean
+    val textRowsBefore = spark.read.parquet(indexDir).count()
     val rowsBefore = StreamingIvf.scanPostings(spark, embIndexDir).get.count()
     val r = StreamingIntake.screenBatchFullIvf(df(b1), indexDir, embIndexDir, 0L,
       screen, quota, ledgerDir, releaseDir, k = 3, tau = 0.9, nprobe = 3)
     assert(r.collect().map(_.mkString("|")).sorted.toSeq ==
       v1.collect().map(_.mkString("|")).sorted.toSeq)
     r.unpersist()
+    val mm = StreamingIntake.screenBatchMultimodalIvf(df(b1).drop("lang"), indexDir,
+      embIndexDir, 0L, screen, k = 3, tau = 0.9, nprobe = 3)
+    assert(mm.collect().map(_.mkString("|")).sorted.toSeq ==
+      v1.drop("lang", "in_quota", "admitted").withColumnRenamed("clean", "admitted")
+        .select(mm.columns.toSeq.map(col): _*).collect().map(_.mkString("|")).sorted.toSeq)
+    assert(release == folded, "replay must leave the release unchanged")
+    assert(spark.read.parquet(indexDir).count() == textRowsBefore)
     assert(StreamingIvf.scanPostings(spark, embIndexDir).get.count() == rowsBefore)
     val ledger = spark.read.option("basePath", ledgerDir).parquet(ledgerDir)
       .groupBy($"lang").sum("n_admitted").collect()
