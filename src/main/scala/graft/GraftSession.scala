@@ -13,8 +13,8 @@ import graft.operators.CorpusManifest
   *  2. **the curation / training-data stack** (near-dup pairs, dup
   *     clusters, ANN probes, corpus manifests) over a data directory's
   *     tables;
-  *  3. **the full driver-gated query registry by name** — all 170+
-  *     oracle-verified operator queries, runnable individually.
+  *  3. **the full query registry by name** — every registry query,
+  *     runnable individually.
   *
   * ```scala
   * val g = GraftSession.open("/data/tables")           // or .attach(spark, dir)
@@ -440,7 +440,9 @@ object GraftSession {
     * sort-based shuffle writer for every shuffle (`bypassMergeThreshold=0`:
     * the bypass writer opens one file per reduce partition per map task,
     * and never fires at production partition counts anyway) and the
-    * whole graft catalog via [[graft.functions.GraftExtensions]].
+    * whole graft catalog via [[graft.functions.GraftExtensions]]. Log
+    * level WARN, except `ResolveWriteToStream`'s benign "adaptive is not
+    * supported in streaming" notice, one per streaming start (ERROR).
     */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -452,7 +454,10 @@ object GraftSession {
       .config("spark.shuffle.sort.bypassMergeThreshold", 0)
       .config("spark.sql.extensions", classOf[functions.GraftExtensions].getName)
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark.sparkContext.setLogLevel("WARN") // rewrites the root config: first
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+      org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

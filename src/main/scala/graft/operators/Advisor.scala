@@ -211,9 +211,10 @@ object Advisor {
   /** [[sizedForWrite]] with the persist discipline a LINEAGE-CARRYING
     * frame needs: armed, the frame is persisted so the z4 estimate pass
     * and the write share one evaluation (the first wiring re-derived
-    * each gold mart TWICE per armed write — AdvisorProbe read the armed
-    * pipeline at 4× disarmed at sf0.1, almost all of it recomputation,
-    * not pricing); disarmed, the write runs on the raw frame untouched.
+    * each gold mart TWICE per armed write — the r13 armed-vs-disarmed
+    * probe read the armed pipeline at 4× disarmed at sf0.1, almost all of
+    * it recomputation, not pricing; NOTES.md, r13); disarmed, the write
+    * runs on the raw frame untouched.
     * The persist is scoped to the call — unpersisted before return.
     */
   def writeSized(site: String, df: DataFrame,

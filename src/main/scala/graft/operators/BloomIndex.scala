@@ -260,7 +260,8 @@ object BloomIndex {
     val sides = sideDirs(fs, indexDir)
     // ONE multi-path read for every side (identical schemas): a read per
     // side dir is a Spark job per side — measured 0.1 s/side/probe, which
-    // dominates probe latency once appends stack up (BloomSideSoak)
+    // dominates probe latency once appends stack up (SCALE.md, "Bloom-index
+    // side-append pricing")
     val frames = read(spark, indexDir) +:
       (if (sides.isEmpty) Seq.empty
        else Seq(spark.read.parquet(sides.map(_.toString): _*)))

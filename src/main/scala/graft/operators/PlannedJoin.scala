@@ -12,13 +12,13 @@ import org.apache.spark.sql.types._
   * picks:
   *
   *  - **fail-loud** — the exact output size exceeds `capRows` (the
-  *    DecadeSoak discipline), checked FIRST: a broadcast would dodge the
-  *    shuffle but not the output volume, which lands on whatever consumes
-  *    the join — so no strategy is exempt from the cap. The error names
-  *    the levers (pre-aggregate a side, tighten keys, frequency-cap hot
-  *    keys, or raise `cap` deliberately when a pass-through output of
-  *    this size is the intent) instead of letting the cluster discover
-  *    it at shuffle time.
+  *    decade rehearsal's discipline, SCALE.md), checked FIRST: a
+  *    broadcast would dodge the shuffle but not the output volume,
+  *    which lands on whatever consumes the join — so no strategy is
+  *    exempt from the cap. The error names the levers (pre-aggregate a
+  *    side, tighten keys, frequency-cap hot keys, or raise `cap`
+  *    deliberately when a pass-through output of this size is the
+  *    intent) instead of letting the cluster discover it at shuffle time.
   *  - **broadcast** — an ELIGIBLE side's payload fits the auto-broadcast
   *    threshold (z3's verdict applied, not guessed from stale stats).
   *    Eligibility is joinType-aware: a LEFT join preserves `a`, so only
@@ -161,7 +161,9 @@ object PlannedJoin {
 
   /** Spark's default auto-broadcast threshold — z3's line. */
   val broadcastThresholdBytes: Long = graft.queries.ScaleOps.broadcastThresholdBytes
-  /** The DecadeSoak output cap shared with j10/j13/j14. */
+  /** The decade rehearsal's output cap (SCALE.md, "Decade-past-bench
+    * rehearsal for the output-bound tier"), shared with j10/j13/j14.
+    */
   val capRows: Long = graft.queries.ScaleOps.selfJoinCap
   /** One key owning ≥ 10% of the exact output is past what AQE's
     * partition splitting can rebalance — the salting line.

@@ -48,18 +48,14 @@ object Dedup {
   /** Distinct word-3-gram shingles per doc, as `(doc_id, shingle)`
     * postings.
     */
-  /** Test/tool access to the shared postings (MemoRaceCheck). */
-  private[graft] def shinglesForCheck(s: SparkSession, dir: String): DataFrame =
-    shingles(s, dir)
-
   private def shingles(s: SparkSession, dir: String): DataFrame =
     // distinct WITHIN the doc (set semantics, no shuffle); short-doc guard
     // lives in Ngrams.postings — the one shared generator.
     // NOT memoized/cached at this grain — r13 measured it both ways: an
     // InMemoryTableScan over the 1M-row postings costs MORE per consumer
     // than re-running the (spread-parallelized) explode (d23 0.41 s
-    // uncached vs 1.8 s through a materialized memo; MemoRaceCheck), so
-    // consumers either recompute in parallel or cache a PRUNED subset
+    // uncached vs 1.8 s through a materialized memo; OPTIMIZATION_r13.md),
+    // so consumers either recompute in parallel or cache a PRUNED subset
     // (d14's probe prefix, d23's pair-doc semi-join).
     Ngrams.postings(Tables.documents(s, dir), n = 3, distinct = true,
       outCol = "shingle")
@@ -1057,12 +1053,10 @@ object Dedup {
           (inter.cast("double") / (size($"ga") + size($"gb") - inter)).as("jaccard"))
   }
 
-  /** d17's prefix-postings stage `(doc_id, shingle, n)` — factored out so
-    * [[graft.tools.DecadeSoak]] can price the candidate join from the
-    * posting dfs (Σ df·(df−1)/2) BEFORE deciding to run it at a scale
-    * where a saturated shingle universe makes the exact tier quadratic.
+  /** d17's prefix-postings stage `(doc_id, shingle, n)`: each doc's
+    * ⌊n/2⌋+1 rarest shingles, the prefix the candidate join keys on.
     */
-  private[graft] def d17PrefixPostings(s: SparkSession, dir: String): DataFrame = {
+  private def d17PrefixPostings(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sh = shingles(s, dir).cache()
     val dfSh = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
@@ -1104,7 +1098,7 @@ object Dedup {
     * rows — SCALE.md). The guard is j13's arithmetic over the blocking
     * key: exact Σ c·(c−1)/2 from the degree profile alone (one groupBy,
     * DECIMAL(38,0) accumulation, no pair ever materialized), refusing
-    * past the shared DecadeSoak cap and naming the levers.
+    * past the shared [[ScaleOps.selfJoinCap]] and naming the levers.
     */
   private[graft] def requireBlockedPairsUnderCap(blocked: DataFrame,
       blkCol: String, site: String, cap: Long = ScaleOps.selfJoinCap,
@@ -1470,8 +1464,8 @@ object Dedup {
       // (r13: a broadcast-semi-join prune of the postings to pair docs,
       // cached, was tried here and REVERTED — under this fixture the
       // cached prune read SLOWER than the three independent re-derivations
-      // of the explode, the same cached-postings-scan cost MemoRaceCheck
-      // measured; the original uncached shape stays.)
+      // of the explode, the same cached-postings-scan cost measured in
+      // OPTIMIZATION_r13.md; the original uncached shape stays.)
       val sh = shingles(s, dir)
       val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
       val shA = sh.select($"doc_id".as("doc_a"), $"shingle")

@@ -295,15 +295,11 @@ object Joins {
       candCap = 300000000L)
   }
 
-  /** j10's bucketed interval-overlap plan with the bucket width exposed —
-    * the dial [[graft.tools.DecadeSoak]] sweeps (fanout per interval =
-    * span/width; candidate dups per pair = shared buckets). The Q above
-    * pins the 1-hour default.
-    */
-  /** j10's two interval sets — exposed so [[graft.tools.DecadeSoak]] can
-    * price the bucket join (Σ_bucket nSessions × nBursts) before running
-    * it at a scale where fixed-window population densification makes the
-    * keyless overlap candidate-quadratic.
+  /** j10's two interval sets, per-user sessions and error bursts. The
+    * pricer reads them to bound the bucket join (Σ_bucket nSessions ×
+    * nBursts) before it runs: under fixed-window population
+    * densification the keyless overlap grows candidate-quadratic
+    * (SCALE.md, "Decade-past-bench rehearsal for the output-bound tier").
     */
   private[graft] def sessionsAndBursts(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
@@ -334,6 +330,12 @@ object Joins {
       (sessions, bursts)
   }
 
+  /** j10's bucketed interval-overlap plan with the bucket width exposed:
+    * fanout per interval = span/width, candidate dups per pair = shared
+    * buckets. The width is the dial the decade rehearsal swept (SCALE.md,
+    * "Decade-past-bench rehearsal for the output-bound tier"); the Q
+    * above pins the 1-hour default.
+    */
   private[graft] def intervalOverlapPlan(
       s: SparkSession, dir: String, bucketUs: Long): DataFrame = {
       val (sessions, bursts) = sessionsAndBursts(s, dir)
@@ -406,8 +408,9 @@ object Joins {
   /** J12: KEYED interval-overlap join — j10's sessions × error bursts
     * restricted to the SAME user: "which of MY sessions ran during one
     * of MY error bursts", the per-tenant incident view. This is the
-    * production shape the DecadeSoak rehearsal prescribes at scale
-    * (SCALE.md r10): the keyless j10 is output-quadratic under
+    * production shape the decade rehearsal prescribes at scale
+    * (SCALE.md, "Decade-past-bench rehearsal for the output-bound tier",
+    * r10): the keyless j10 is output-quadratic under
     * fixed-window population densification, while keying by the
     * population axis makes candidates Σ_user nS(u)·nB(u) — linear in
     * users at constant per-user activity — and turns the plan into ONE

@@ -12,9 +12,11 @@ import graft.Tables
   *
   * These generalize the priced-before-run discipline the d17/j10 decade
   * rehearsals established (SCALE.md): j13 prices ANY equi-self-join from
-  * its key-degree profile the same way DecadeSoak priced d17's prefix
-  * postings, and z2 is the planning pass a RangePartitioner-style global
-  * sort runs — sample, cut boundaries, audit the realized balance.
+  * its key-degree profile the same way the decade rehearsal priced d17's
+  * prefix postings (SCALE.md, "Decade-past-bench rehearsal for the
+  * output-bound tier"), and z2 is the planning pass a
+  * RangePartitioner-style global sort runs — sample, cut boundaries,
+  * audit the realized balance.
   *
   * Cross-engine exactness: every pseudo-random draw is the md5-derived
   * 24-bit integer of [[graft.domain.DomainConfig.draw]] (`conv(substr(
@@ -231,7 +233,10 @@ object ScaleOps {
 
   // ---------------------------------------------------------------- j13
 
-  /** The DecadeSoak candidate cap, shared with j10's pricer. */
+  /** The candidate cap of the decade rehearsal (SCALE.md,
+    * "Decade-past-bench rehearsal for the output-bound tier"), shared with
+    * j10's pricer.
+    */
   val selfJoinCap = 300000000L
 
   /** J13: SELF-JOIN PRICER — the j10/d17 priced-before-run discipline
@@ -239,7 +244,7 @@ object ScaleOps {
     * (one groupBy, no pair ever materialized), the exact candidate count
     * Σ c·(c−1)/2, the full join size Σ c², the uniform-keys estimate
     * n²/ndv, the skew amplification vs that estimate, the single hottest
-    * key's share, and the verdict against the 3×10⁸ DecadeSoak cap.
+    * key's share, and the verdict against the 3×10⁸ [[selfJoinCap]].
     * This is the report that decides — BEFORE the shuffle — whether a
     * dedup/linkage candidate join runs as-is, gets a frequency cap (d2's
     * rare-shingle rule), or needs salting (j7).

@@ -310,19 +310,21 @@ object Similarity {
     * production tail the r5 sign-bucket variant documented as its swap
     * target): a vector ranks only its own cell's members, so the pair
     * space is Σ|cell|², never N², and the blocking structure follows the
-    * data instead of fixed sign planes. AnnFrontier's planted-pair
-    * comparison measures the swap's recall win (sign buckets split
-    * planted near-pairs across any flipped near-zero dim; Lloyd cells
-    * keep them together). Vectors alone in their cell emit no rows — an
-    * empty neighborhood, not a missing contract. Cosine ordering is
+    * data instead of fixed sign planes. The planted-pair comparison
+    * (SCALE.md, "Similarity search", r6 kNN graph) measures the swap's
+    * recall win (sign buckets split planted near-pairs across any
+    * flipped near-zero dim; Lloyd cells keep them together). Vectors
+    * alone in their cell emit no rows — an empty neighborhood, not a
+    * missing contract. Cosine ordering is
     * cross-engine-safe: the fold dot is bit-identical (FloatVecDot ≡
     * oracle fold), ties break by neighbor id; the oracle replays the
     * identical index via the shared Lloyd CTEs.
     *
     * CELL COUNT SCALES WITH THE CORPUS: kIvf ≈ √N keeps in-cell pair
     * work at N^1.5 total and per-cell membership ≈ √N (the SCALE.md
-    * sizing rule measured by AnnFrontier; the gate SFs share e4's
-    * kIvf=16 session index so the build cost amortizes across queries).
+    * sizing rule measured by the r5 recall/latency frontier; the gate
+    * SFs share e4's kIvf=16 session index so the build cost amortizes
+    * across queries).
     */
   val knnGraph = Q("e11_knn_graph", {
     val d = dotSql.format("a.embedding", "b.embedding")
@@ -1812,11 +1814,12 @@ object Similarity {
       // joins degrees twice) — e18's precedent. EAGER localCheckpoint
       // rather than .cache(): deg is consumed as a broadcast BUILD side
       // (a racing broadcast-future job) and a lazy cache never
-      // materializes under that race (the r13 t18 lesson — QProfile r14
-      // measured 12–18 executor-s of subtree recompute per steady-state
-      // run through the caches; guide §5). An eager-cache variant was
-      // A/B'd and lost (0.68-0.70 s vs 0.49-0.53 s under matched load):
-      // the truncated lineage also shrinks every downstream stats plan.
+      // materializes under that race (the r13 t18 lesson — the r14 stage
+      // profile, OPTIMIZATION_r14.md, measured 12–18 executor-s of subtree
+      // recompute per steady-state run through the caches; guide §5). An
+      // eager-cache variant was A/B'd and lost (0.68-0.70 s vs 0.49-0.53 s
+      // under matched load): the truncated lineage also shrinks every
+      // downstream stats plan.
       val bi = und.select($"u".as("node"), $"v".as("nbr"))
         .unionAll(und.select($"v".as("node"), $"u".as("nbr")))
         .localCheckpoint(true)

@@ -1,9 +1,8 @@
 package graft.tools
 
-/** Batch plan capture for the optimization rounds: write
-  * `.explain("formatted")` for each named registry query to
-  * `<outDir>/<name>_<suffix>.txt` in ONE session (PlanDump spawns a JVM
-  * per query; capturing a dozen before/after plans needs one).
+/** Plan capture: write `.explain("formatted")` for each named registry
+  * query to `<outDir>/<name>_<suffix>.txt`, all in one session (one
+  * query or a dozen before/after plans).
   *
   * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.tools.PlanSnap \
   *   <outDir> <suffix> <sfDir> <name> [name ...]"

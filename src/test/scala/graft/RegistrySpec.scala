@@ -39,6 +39,11 @@ class RegistrySpec extends AnyFunSuite with SparkTestKit {
     val registrars = (sitesOf("createOrReplaceTempFunction").keySet ++
       sitesOf("registerFunction").keySet)
     assert(registrars == Set("src/main/scala/graft/Graft.scala"), registrars)
+    // the allowed mains: Bench and Verify, the two demos, and three tools
+    val mains = sitesOf("def main(").keySet
+      .map(_.stripPrefix("src/main/scala/graft/").stripSuffix(".scala"))
+    assert(mains == Set("Bench", "Verify", "domain/PipelineDemo", "streaming/StreamDemo",
+      "tools/CoverageMap", "tools/PlanSnap", "tools/Soak"), mains)
     val build = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("build.sbt")), "UTF-8")
     assert(!build.contains("-Dspark."), "Spark settings belong in GraftSession.local")

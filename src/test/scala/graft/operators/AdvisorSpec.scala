@@ -220,7 +220,8 @@ class AdvisorSpec extends AnyFunSuite with SparkTestKit {
   test("an armed wired site surfaces the advisor's refusal (cap) instead of running blind") {
     import spark.implicits._
     Advisor.clear(spark)
-    // 20k² = 4×10⁸ priced output rows — past the 3×10⁸ DecadeSoak cap
+    // 20k² = 4×10⁸ priced output rows — past the 3×10⁸ cap of SCALE.md's
+    // "Decade-past-bench rehearsal for the output-bound tier"
     val hot = (0 until 20000).map(_ => (1, "x")).toDF("k", "v")
     val err = intercept[IllegalStateException] {
       armed {

@@ -147,6 +147,11 @@ class BloomIndexSpec extends AnyFunSuite with SparkTestKit {
         s"key $key lost with un-folded sides")
       assert(BloomIndex.lookup(spark, dataDir, idxDir, "lang", "k", key).count() == 1L)
     }
+    // a partition refresh leaves the sides stacked; every key still routes
+    BloomIndex.refreshPartitions(spark, dataDir, idxDir, "lang", "k", Seq("lang3"), 4000L)
+    for ((key, part) <- Seq((77777L, "lang3"), (88801L, "lang9"), (88802L, "lang3")))
+      assert(BloomIndex.candidateParts(spark, idxDir, key).contains(part),
+        s"key $key lost after a refresh with sides stacked")
     // fold: one refresh over the side-touched partitions, sides dropped
     val folded = BloomIndex.compactSides(spark, dataDir, idxDir, "lang", "k", 4000L)
     assert(folded.toSet == Set("lang3", "lang9"))

@@ -2,6 +2,12 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -39,16 +45,34 @@ class StreamingGoldSpec extends AnyFunSuite with SparkTestKit {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
 
+  /** Every log message `body` emits at the levels the loggers pass. */
+  private def logged(body: => Unit): Seq[String] = {
+    val seen = new ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("streaming-gold-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
+
   test("maintained marts after two micro-batches == one-shot batch recompute") {
     val bronzeDir = tmp("sg-bronze"); val silverDir = tmp("sg-silver")
     val goldDir = tmp("sg-gold"); val ckpt = tmp("sg-ckpt")
     val freight = freightSilver
     val cfgFor = (id: Long) => if (id == 0L) cfgJul else cfgAug
 
-    // batch 0: July processing date
+    // batch 0: July processing date; the session config silences the
+    // benign per-start "adaptive is not supported in streaming" notice
     writeBronze(bronzeDir, GenSpec(joor = 40), cfgJul)
-    StreamingGold.goldMaintenance(cleansedStream(bronzeDir), silverDir, goldDir,
-      ckpt, freight, cfgFor).start().awaitTermination()
+    val notices = logged {
+      StreamingGold.goldMaintenance(cleansedStream(bronzeDir), silverDir, goldDir,
+        ckpt, freight, cfgFor).start().awaitTermination()
+    }.filter(_.contains("spark.sql.adaptive.enabled is not supported"))
+    assert(notices.isEmpty, notices)
 
     // batch 1: NEW files only, August processing date → a second month
     writeBronze(bronzeDir, GenSpec(joor = 30, seed = 43), cfgJul)

@@ -420,6 +420,15 @@ class StreamingIntakeSpec extends AnyFunSuite with SparkTestKit {
     assert(v.select($"doc_id").collect().map(_.getLong(0)).toSet ==
       Set(0L, 1L, 3L, 12L, 13L))
     assert(v.filter($"doc_id" === 1L).head().getAs[Boolean]("is_near_dup"))
+    // one verdict per doc, admitted = clean ∧ in_quota, and the quota
+    // ledger conserves the admitted verdicts, within the quota
+    assert(v.count() == 5L)
+    assert(v.filter($"admitted" =!= ($"clean" && $"in_quota")).isEmpty)
+    val ledgerN = spark.read.option("basePath", ledgerDir).parquet(ledgerDir)
+      .groupBy($"lang").sum("n_admitted").collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ledgerN == Map("en" -> v.filter($"admitted").count()) && ledgerN("en") <= 100L,
+      s"quota ledger: $ledgerN")
     // drift: per-batch bins + summaries exist; in-family batches don't alert
     assert(spark.read.parquet(driftBins).select($"__batch").distinct().count() == 2)
     (0L to 1L).foreach { b =>

@@ -315,9 +315,10 @@ class StreamingIvfRetractSpec extends AnyFunSuite with SparkTestKit {
     val dir = tmp("sivf-retract-hot")
     def vec(d: Int, j: Int): Seq[Float] =
       Seq.tabulate(16)(i => if (i == d) 1f else 0.001f * j)
-    // balanced-train-then-drift (the IvfSplitSoak fixture lesson: training
-    // ON the skew absorbs the hot cluster): batch 0 trains on 2 rows per
-    // direction, batch 1 pours 20 skewed rows into direction 0's cell
+    // balanced-train-then-drift (the split-pricing fixture lesson in
+    // SCALE.md, "IVF hot-cell splits": training ON the skew absorbs the
+    // hot cluster): batch 0 trains on 2 rows per direction, batch 1 pours
+    // 20 skewed rows into direction 0's cell
     def df(rows: Seq[(Long, Seq[Float], Int)]) =
       rows.toDF("vec_id", "embedding", "label")
         .selectExpr("vec_id", "cast(embedding as array<float>) as embedding",
