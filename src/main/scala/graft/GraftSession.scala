@@ -58,7 +58,7 @@ final class GraftSession private (val spark: SparkSession, val dataDir: String) 
       spec: GenSpec = GenSpec(),
       cfg: DomainConfig = DomainConfig(dedupeFreight = true)): DataFrame = {
     val (_, gold, kpi) = Pipeline.runInMemory(spark, spec, cfg)
-    Pipeline.writeWarehouse(gold, warehouseDir)
+    Pipeline.writeWarehouse(gold, warehouseDir, Pipeline.WholeTable)
     Pipeline.registerViews(spark, warehouseDir)
     kpi
   }

@@ -63,11 +63,8 @@ object Cm1 {
   /** Shopify DTC item mart (`silver_to_gold.py:358-428`).
     * Flat cost model: item_unit_cost = 20.0 per item row.
     */
-  def shopify(silver: DataFrame, cfg: DomainConfig): DataFrame =
-    shopifyAt(silver, cfg, to_date(lit(cfg.asOf)))
-
-  /** Per-row-stamped variant; see [[joorAt]]. */
-  def shopifyAt(silver: DataFrame, cfg: DomainConfig, dateCol: Column): DataFrame = {
+  def shopify(silver: DataFrame, cfg: DomainConfig): DataFrame = {
+    val dateCol = to_date(lit(cfg.asOf))
     val c = Geography.country(col("customer_name"), col("order_id"), cfg,
       Seq.empty, Geography.shopifyResidual, Geography.shopifyResidualDefault)
     silver.select(
@@ -101,11 +98,8 @@ object Cm1 {
   /** TikTok livestream item mart (`silver_to_gold.py:432-497`).
     * Flat cost model: item_unit_cost = 18.0 per item row.
     */
-  def tiktok(silver: DataFrame, cfg: DomainConfig): DataFrame =
-    tiktokAt(silver, cfg, to_date(lit(cfg.asOf)))
-
-  /** Per-row-stamped variant; see [[joorAt]]. */
-  def tiktokAt(silver: DataFrame, cfg: DomainConfig, dateCol: Column): DataFrame = {
+  def tiktok(silver: DataFrame, cfg: DomainConfig): DataFrame = {
+    val dateCol = to_date(lit(cfg.asOf))
     val c = Geography.country(col("buyer_name"), col("order_id"), cfg,
       Seq.empty, Geography.tiktokResidual, Geography.tiktokResidualDefault)
     silver.select(

@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * Postgres→ClickHouse across four processes, SURVEY §0) with a single
   * Catalyst-planned dataflow over a parquet warehouse:
   *
-  *  - gold tables are written `partitionBy("month_key")`, mirroring the
+  *  - every gold mart, batch or streaming, is written by one step,
+  *    [[Pipeline.publish]]: `partitionBy("month_key")`, mirroring the
   *    MergeTree monthly partitioning intent (`silver_to_gold.py:144-146`)
   *    — partition pruning replaces ClickHouse part pruning;
   *  - the per-mart `df.count()` write-guards of the reference
@@ -18,8 +19,12 @@ import org.apache.spark.sql.functions._
   *    dropped: writing an empty frame is a no-op, and nothing here is
   *    evaluated more than once;
   *  - the gold checkpoint that the reference saves but never reads
-  *    (§2.8, unbounded duplication under `append`) is replaced by
-  *    idempotent `overwrite` per run.
+  *    (§2.8, unbounded duplication under `append`) is replaced by an
+  *    idempotent overwrite per run, of the whole table or of the touched
+  *    months only ([[Pipeline.Scope]]);
+  *  - `exec_daily_kpi` has one definition, [[Kpi.execDailyKpi]], run in
+  *    memory by [[Pipeline.kpi]] and over the warehouse by
+  *    [[Pipeline.registerViews]].
   */
 object Pipeline {
 
@@ -79,32 +84,67 @@ object Pipeline {
     (silver, gold, kpi(gold))
   }
 
-  /** Persist a Gold set as a partitioned parquet warehouse and register
-    * Spark SQL views (the ClickHouse/BI surface, SURVEY §3.3).
+  /** One gold mart: its table name and where a [[Gold]] holds its frame. */
+  final case class Mart(name: String, of: Gold => DataFrame)
+
+  /** The mart catalogue: each gold mart's table name, listed once. */
+  object Mart {
+    val wholesaleCm1 = Mart("wholesale_cm1", _.joorCm1)
+    val wholesaleCm2 = Mart("wholesale_cm2", _.joorCm2)
+    val shopifyCm1 = Mart("shopify_cm1", _.shopifyCm1)
+    val shopifyCm2 = Mart("shopify_cm2", _.shopifyCm2)
+    val livestreamingCm1 = Mart("livestreaming_cm1", _.tiktokCm1)
+    val livestreamingCm2 = Mart("livestreaming_cm2", _.tiktokCm2)
+    val factFreight = Mart("fact_freight", _.factFreight)
+    /** Every mart, in publish order. */
+    val all: Seq[Mart] = Seq(wholesaleCm1, wholesaleCm2, shopifyCm1, shopifyCm2,
+      livestreamingCm1, livestreamingCm2, factFreight)
+  }
+
+  /** How much of each mart one publish replaces (Spark's partition
+    * overwrite mode for the write).
     */
-  def writeWarehouse(gold: Gold, dir: String): Unit = {
-    def monthly(df: DataFrame): DataFrame =
-      df.withColumn("month_key", substring(col("date_key"), 1, 6))
-    Seq(
-      "wholesale_cm1" -> monthly(gold.joorCm1),
-      "wholesale_cm2" -> monthly(gold.joorCm2),
-      "shopify_cm1" -> monthly(gold.shopifyCm1),
-      "shopify_cm2" -> monthly(gold.shopifyCm2),
-      "livestreaming_cm1" -> monthly(gold.tiktokCm1),
-      "livestreaming_cm2" -> monthly(gold.tiktokCm2),
-      "fact_freight" -> monthly(gold.factFreight)
-    ).foreach { case (name, df) =>
+  sealed abstract class Scope(val overwriteMode: String)
+  /** Replace the whole table: every month partition not written is gone. */
+  case object WholeTable extends Scope("static")
+  /** Replace only the month partitions the frame holds rows for; the
+    * other months stay as they are. This is the correct version of the
+    * reference's broken incremental cycle, which saves a gold checkpoint
+    * it never reads and blindly appends, duplicating every mart on each
+    * 300 s run (SURVEY §2.8): a rerun over the same month is idempotent
+    * and a new month lands as a new partition.
+    */
+  case object TouchedMonths extends Scope("dynamic")
+
+  /** The gold publish step: each `(mart name, frame)` is written to
+    * `dir/name` partitioned by `month_key = substring(date_key, 1, 6)`,
+    * replacing what `scope` names.
+    */
+  def publish(marts: Seq[(String, DataFrame)], dir: String, scope: Scope): Unit =
+    marts.foreach { case (name, df) =>
       // WIRED z4 site (flag `spark.graft.advisor.arm`): armed, each mart
       // repartitions to the 64 MiB operating point on month_key before
       // the write — the gold files are sized by the priced byte model
       // instead of by whatever partitioning upstream shuffles left.
       // writeSized persists the mart across the estimate AND the write
       // (the mart lineage must not be derived twice per armed write)
-      graft.operators.Advisor.writeSized(s"gold_write_$name", df,
+      graft.operators.Advisor.writeSized(s"gold_write_$name",
+        df.withColumn("month_key", substring(col("date_key"), 1, 6)),
         Seq("month_key")) {
-        _.write.mode("overwrite").partitionBy("month_key").parquet(s"$dir/$name")
+        _.write
+          .option("partitionOverwriteMode", scope.overwriteMode)
+          .mode("overwrite")
+          .partitionBy("month_key")
+          .parquet(s"$dir/$name")
       }
     }
+
+  /** Persist a Gold set as a parquet warehouse: every mart through
+    * [[publish]], then the two unpartitioned dims, which are always
+    * replaced whole.
+    */
+  def writeWarehouse(gold: Gold, dir: String, scope: Scope): Unit = {
+    publish(Mart.all.map(m => m.name -> m.of(gold)), dir, scope)
     gold.dimDate.write.mode("overwrite").parquet(s"$dir/dim_date")
     gold.dimChannels.write.mode("overwrite").parquet(s"$dir/dim_channels")
   }
@@ -123,72 +163,17 @@ object Pipeline {
       silver.freight, "silver_freight_data_bucketed", "order_reference", buckets)
   }
 
-  /** Incremental gold refresh — the correct version of the reference's
-    * broken cycle (it saves a gold checkpoint it never reads and blindly
-    * appends, duplicating every mart each 300 s run — SURVEY §2.8).
-    *
-    * Dynamic partition overwrite: each run rewrites ONLY the `month_key`
-    * partitions present in this batch (the processing month, under the
-    * reference's date-stamping), leaving historical months untouched.
-    * Repeated runs over the same month are idempotent; new months append
-    * as new partitions. At 100 TB this touches one month of files per
-    * cycle instead of the whole mart.
-    */
-  def writeWarehouseIncremental(gold: Gold, dir: String): Unit = {
-    def monthly(df: DataFrame): DataFrame =
-      df.withColumn("month_key", substring(col("date_key"), 1, 6))
-    Seq(
-      "wholesale_cm1" -> monthly(gold.joorCm1),
-      "wholesale_cm2" -> monthly(gold.joorCm2),
-      "shopify_cm1" -> monthly(gold.shopifyCm1),
-      "shopify_cm2" -> monthly(gold.shopifyCm2),
-      "livestreaming_cm1" -> monthly(gold.tiktokCm1),
-      "livestreaming_cm2" -> monthly(gold.tiktokCm2),
-      "fact_freight" -> monthly(gold.factFreight)
-    ).foreach { case (name, df) =>
-      // same WIRED z4 sizing as writeWarehouse (shared persist discipline)
-      graft.operators.Advisor.writeSized(s"gold_write_$name", df,
-        Seq("month_key")) {
-        _.write
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite")
-          .partitionBy("month_key")
-          .parquet(s"$dir/$name")
-      }
-    }
-    gold.dimDate.write.mode("overwrite").parquet(s"$dir/dim_date")
-    gold.dimChannels.write.mode("overwrite").parquet(s"$dir/dim_channels")
-  }
-
-  /** Register the warehouse as temp views + the `exec_daily_kpi` SQL view
-    * (`scripts/sql/.sql:3-26` re-expressed as Spark SQL).
+  /** Register the warehouse's marts and dims as temp views, plus the
+    * `exec_daily_kpi` view (`scripts/sql/.sql:3-26`): [[Kpi.execDailyKpi]]
+    * over the read-back CM2 marts, the same program [[kpi]] runs in memory.
     */
   def registerViews(spark: SparkSession, dir: String): Unit = {
-    Seq("wholesale_cm1", "wholesale_cm2", "shopify_cm1", "shopify_cm2",
-      "livestreaming_cm1", "livestreaming_cm2", "fact_freight",
-      "dim_date", "dim_channels").foreach { t =>
+    (Mart.all.map(_.name) ++ Seq("dim_date", "dim_channels")).foreach { t =>
       spark.read.parquet(s"$dir/$t").createOrReplaceTempView(t)
     }
-    // money discipline mirrors Kpi.execDailyKpi: cent-snapped decimal
-    // sums (order-independent), unrounded ratio KPIs
-    spark.sql("""
-      CREATE OR REPLACE TEMP VIEW exec_daily_kpi AS
-      SELECT date_key, channel_id, country, region,
-             to_date(date_key, 'yyyyMMdd') AS date,
-             CAST(CAST(SUM(CAST(net_revenue AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS total_revenue,
-             CAST(CAST(SUM(CAST(cm2_amount AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) AS net_margin,
-             COUNT(DISTINCT order_no) AS total_orders,
-             CAST(CAST(SUM(CAST(net_revenue AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE) / COUNT(DISTINCT order_no) AS avg_order_value,
-             (CAST(CAST(SUM(CAST(cm2_amount AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE)
-              / CAST(CAST(SUM(CAST(net_revenue AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS DOUBLE)) * 100.0 AS margin_percentage
-      FROM (
-        SELECT date_key, order_no, net_revenue, cm2_amount, channel_id, country, region FROM wholesale_cm2
-        UNION ALL
-        SELECT date_key, order_no, net_revenue, cm2_amount, channel_id, country, region FROM shopify_cm2
-        UNION ALL
-        SELECT date_key, order_no, net_revenue, cm2_amount, channel_id, country, region FROM livestreaming_cm2
-      )
-      GROUP BY date_key, channel_id, country, region
-      ORDER BY date_key DESC""")
+    import Mart._
+    Kpi.execDailyKpi(Kpi.unionCm2(spark.table(wholesaleCm2.name),
+      spark.table(shopifyCm2.name), spark.table(livestreamingCm2.name)))
+      .createOrReplaceTempView("exec_daily_kpi")
   }
 }

@@ -15,7 +15,7 @@ object PipelineDemo {
     val spec = GenSpec()
     val (silver, gold, _) = Pipeline.runInMemory(spark, spec, cfg)
     val dir = Files.createTempDirectory("demo-warehouse").toString
-    Pipeline.writeWarehouse(gold, dir)
+    Pipeline.writeWarehouse(gold, dir, Pipeline.WholeTable)
     Pipeline.registerViews(spark, dir)
 
     println(s"[pipeline-demo] silver rows: joor=${silver.joor.count()} " +

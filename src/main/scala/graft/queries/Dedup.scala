@@ -1026,20 +1026,21 @@ object Dedup {
       // × doc text) and a FORCED broadcast can exceed the 8 GB relation
       // cap / OOM the driver at corpus scale where a shuffle join scales
       // fine. Upper-bound it from the SOURCE parquet's on-disk size
-      // (candidate pruning only shrinks the table; ×8 covers parquet
-      // decompression + the 3-word gram fanout) — pure FS metadata, no
-      // Spark job, no extra analysis pass per run (an eager count() +
-      // cached-stats gate was measured at +0.3-0.7 s/run and reverted,
-      // as was a bare unhinted variant that lost the cache to the racing
-      // broadcast futures and re-ran the whole prefix pipeline per
-      // consumer: 5.4 s vs 0.7 s). Broadcast while the bound sits inside
-      // the guide's "a few hundred MB is fine" envelope (§3.1); beyond
-      // it the planner is left to pick from its own estimates. The
-      // ids-only `needed` broadcast above stays: ids, not payloads.
+      // (candidate pruning only shrinks the table; ×16 covers parquet
+      // text compression on repetitive corpora, the 3-word gram fanout
+      // and JVM string overhead) — pure FS metadata, no Spark job, no
+      // extra analysis pass per run (an eager count() + cached-stats
+      // gate was measured at +0.3-0.7 s/run and reverted, as was a bare
+      // unhinted variant that lost the cache to the racing broadcast
+      // futures and re-ran the whole prefix pipeline per consumer: 5.4 s
+      // vs 0.7 s). Broadcast while the bound sits under the session's
+      // `spark.sql.autoBroadcastJoinThreshold` (-1: never); beyond it the
+      // planner is left to pick from its own estimates. The ids-only
+      // `needed` broadcast above stays: ids, not payloads.
       val docsPath = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
       val docsBytes = docsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
         .getContentSummary(docsPath).getLength
-      val arrFits = docsBytes * 8 <= (512L << 20)
+      val arrFits = docsBytes * 16 <= s.sessionState.conf.autoBroadcastJoinThreshold
       def gated(d: DataFrame): DataFrame = if (arrFits) broadcast(d) else d
       val inter = size(array_intersect($"ga", $"gb"))
       cand

@@ -69,19 +69,6 @@ object StreamingAnomaly {
     spark.range(0).select(col("id").as("batch_id"),
       col("id").as("n_rows"), col("id").as("kpi"))
 
-  /** Ledger rows for batches strictly before `batchId` (replays never see
-    * their own or later batches — the StreamingAdmission fence).
-    * Full-history read — audit/debug surface; the per-batch scoring path
-    * reads only the trailing `window` partitions.
-    */
-  def ledgerBefore(spark: SparkSession, ledgerDir: String, batchId: Long): DataFrame = {
-    val ids = SnapshotLedger.partIds(spark, ledgerDir).filter(_ < batchId)
-    if (ids.isEmpty) emptyLedger(spark)
-    else spark.read.option("basePath", ledgerDir)
-      .parquet(ids.map(i => s"$ledgerDir/batch_id=$i"): _*)
-      .withColumn("batch_id", col("batch_id").cast("long"))
-  }
-
   /** One micro-batch: score against the trailing ledger, then land the
     * batch's own ledger row and verdict — both writes batch-scoped
     * (replay-idempotent: a replayed batch re-scores against exactly the

@@ -60,14 +60,6 @@ object StreamingCusum {
       .parquet(ids.map(i => s"$ledgerDir/batch_id=$i"): _*)
       .withColumn("batch_id", col("batch_id").cast("long"))
 
-  /** Ledger rows strictly before `batchId` (replays never see their own
-    * or later rows — the StreamingAdmission fence). Full-history read —
-    * audit/debug surface; the per-batch path reads bounded slices.
-    */
-  def ledgerBefore(spark: SparkSession, ledgerDir: String, batchId: Long): DataFrame =
-    parts(spark, ledgerDir,
-      SnapshotLedger.partIds(spark, ledgerDir).filter(_ < batchId))
-
   /** The two-sided CUSUM verdict for one batch given the ledger of
     * earlier batches: `(batch_id, n_rows, kpi, s_up, smin_up, s_dn,
     * smin_dn, cusum_up_scaled, cusum_dn_scaled, is_alarm)`. The UP side

@@ -3,13 +3,15 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
-import graft.domain.{Cleanse, Cm1, Cm2, DomainConfig}
+import graft.domain.{Cleanse, Cm1, Cm2, DomainConfig, Pipeline}
+import graft.domain.Pipeline.Mart
 
-/** Streaming incremental silver→gold mart maintenance — the streaming face
-  * of `domain.Pipeline.writeWarehouseIncremental` and the *fixed* version
-  * of the reference's broken gold cycle (`silver_to_gold.py:144-146` +
-  * SURVEY §2.8: it saves a gold checkpoint it never reads and blindly
-  * appends, duplicating every mart on each 300 s run).
+/** Streaming incremental silver→gold mart maintenance of the joor CM1/CM2
+  * marts: the *fixed* version of the reference's broken gold cycle
+  * (`silver_to_gold.py:144-146` + SURVEY §2.8: it saves a gold checkpoint
+  * it never reads and blindly appends, duplicating every mart on each
+  * 300 s run). The marts go through the batch pipeline's own gold step,
+  * `domain.Pipeline.publish`, with the touched-months scope.
   *
   * Topology per micro-batch of cleansed (silver-shaped) joor orders:
   *
@@ -22,11 +24,11 @@ import graft.domain.{Cleanse, Cm1, Cm2, DomainConfig}
   *     batch rewrites the same files instead of duplicating them.
   *  2. The months touched by this batch (normally exactly one) have their
   *     CM1/CM2 mart partitions recomputed FROM THE SILVER STORE and
-  *     published with dynamic partition overwrite — historical months are
-  *     never read or written. Because the mart recompute is a pure
-  *     function of the silver store (narrow CM1 projection with the
-  *     per-row `ingest_date` stamp + broadcast freight join), a replayed
-  *     or crashed-and-restarted batch converges to the identical marts.
+  *     published over those months only — historical months are never
+  *     read or written. Because the mart recompute is a pure function of
+  *     the silver store (narrow CM1 projection with the per-row
+  *     `ingest_date` stamp + broadcast freight join), a replayed or
+  *     crashed-and-restarted batch converges to the identical marts.
   *
   * Scale: each cycle reads one month partition of silver (partition
   * pruning on `month_key`) and rewrites one month partition of each mart.
@@ -51,14 +53,8 @@ object StreamingGold {
     Cleanse.toSilver(cleansed)
       .withColumn("ingest_date", to_date(lit(cfg.asOf)))
 
-  private def writeMonthly(mart: DataFrame, dir: String): Unit =
-    mart
-      .withColumn("month_key", substring(col("date_key"), 1, 6))
-      .write
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite")
-      .partitionBy("month_key")
-      .parquet(dir)
+  /** The marts this sink maintains. */
+  private val marts = Seq(Mart.wholesaleCm1, Mart.wholesaleCm2)
 
   /** Replay-drift guard: the whole idempotence story assumes
     * `cfgForBatch` is a PURE function of batchId — a caller wiring a
@@ -93,9 +89,9 @@ object StreamingGold {
 
   /** Recompute one month's CM1/CM2 mart partitions from the silver store.
     * A month left EMPTY by a drifted-replay eviction gets its mart
-    * partitions (and the hollow silver month dir) removed outright —
-    * dynamic overwrite can't retract a partition the recompute emits zero
-    * rows for.
+    * partitions (and the hollow silver month dir) removed outright — a
+    * touched-months publish can't retract a partition the recompute emits
+    * zero rows for.
     */
   private def recomputeMonth(spark: SparkSession, silverDir: String,
       goldDir: String, freightSilver: DataFrame, cfg: DomainConfig,
@@ -107,8 +103,7 @@ object StreamingGold {
       fs.listStatus(monthDir).exists(_.getPath.getName.startsWith("batch_id="))
     if (!hasData) {
       fs.delete(monthDir, true)
-      fs.delete(new Path(s"$goldDir/wholesale_cm1/month_key=$mk"), true)
-      fs.delete(new Path(s"$goldDir/wholesale_cm2/month_key=$mk"), true)
+      marts.foreach(m => fs.delete(new Path(s"$goldDir/${m.name}/month_key=$mk"), true))
       return
     }
     val silverMonth = spark.read
@@ -117,8 +112,8 @@ object StreamingGold {
       .where(col("month_key") === lit(mk))
     val cm1 = Cm1.joorAt(silverMonth, cfg, col("ingest_date"))
     val cm2 = Cm2.joor(cm1, freightSilver, cfg)
-    writeMonthly(cm1, s"$goldDir/wholesale_cm1")
-    writeMonthly(cm2, s"$goldDir/wholesale_cm2")
+    Pipeline.publish(Seq(Mart.wholesaleCm1.name -> cm1, Mart.wholesaleCm2.name -> cm2),
+      goldDir, Pipeline.TouchedMonths)
   }
 
   /** One micro-batch of gold maintenance (also the replay entry point the

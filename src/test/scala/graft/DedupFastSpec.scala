@@ -1,6 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import graft.queries.Dedup
 
 /** Gate for the production (xxhash64-integer) MinHash variant: same
@@ -9,7 +13,7 @@ import graft.queries.Dedup
   * sitting exactly at est_jaccard == 0.5 may flip in or out — the gate is
   * high set-agreement, not equality.
   */
-class DedupFastSpec extends AnyFunSuite with SparkTestKit {
+class DedupFastSpec extends AnyFunSuite with SparkTestKit with AdaptiveSparkPlanHelper {
 
   test("fast minhash agrees with the md5 oracle variant on the corpus") {
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
@@ -86,5 +90,40 @@ class DedupFastSpec extends AnyFunSuite with SparkTestKit {
     Dedup.requireBlockedPairsUnderCap(dense, "blk", "spec_fixture", cap = 800000L)
     assert(Dedup.goldenRecord.run(spark, sfDir).count() > 0)
     assert(Dedup.fellegiSunter.run(spark, sfDir).count() > 0)
+  }
+
+  test("d17 broadcast gate follows spark.sql.autoBroadcastJoinThreshold") {
+    // planned, not run: the two joins that carry the 3-gram arrays, and
+    // whether the ids-only `needed` semi-join inside the array cache is
+    // still a broadcast
+    def planned(): (Seq[String], Boolean) = {
+      val plan = Dedup.prefixFilterJoin.run(spark, sfDir).queryExecution.executedPlan
+      def carriesArrays(p: SparkPlan) = p.output.exists(a => a.name == "ga" || a.name == "gb")
+      val arrayJoins = collect(plan) { case j: BaseJoinExec if carriesArrays(j) => j.nodeName }
+      val neededBroadcast = collect(plan) {
+        case t: InMemoryTableScanExec if carriesArrays(t) => t.relation.cachedPlan
+      }.exists(p => collect(p) { case b: BroadcastHashJoinExec => b.joinType }
+        .contains(org.apache.spark.sql.catalyst.plans.LeftSemi))
+      (arrayJoins, neededBroadcast)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    try {
+      // documents.parquet ×16 sits under the 10 MB default: broadcast
+      assert(planned() == (Seq("BroadcastHashJoin", "BroadcastHashJoin"), true))
+      spark.conf.set(key, "-1") // never broadcast
+      val (arrayJoins, neededBroadcast) = planned()
+      assert(arrayJoins.size == 2 && !arrayJoins.exists(_.startsWith("Broadcast")),
+        s"array-side joins still broadcast under threshold -1: $arrayJoins")
+      assert(neededBroadcast, "the ids-only `needed` broadcast must stay")
+    } finally {
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      // caches planned under -1 must not serve later suites
+      spark.catalog.clearCache()
+      graft.queries.Memo.clear(spark)
+    }
   }
 }

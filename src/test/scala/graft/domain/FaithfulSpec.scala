@@ -120,13 +120,26 @@ class FaithfulSpec extends AnyFunSuite with SparkTestKit {
       "blind append must duplicate (the reference's observable §2.8 behavior)")
 
     // engine fix 1: full overwrite per run
-    Pipeline.writeWarehouse(gold, s"$dir/wh")
-    Pipeline.writeWarehouse(gold, s"$dir/wh")
+    Pipeline.writeWarehouse(gold, s"$dir/wh", Pipeline.WholeTable)
+    Pipeline.writeWarehouse(gold, s"$dir/wh", Pipeline.WholeTable)
     assert(spark.read.parquet(s"$dir/wh/wholesale_cm2").count() == rows)
 
     // engine fix 2: dynamic partition overwrite (touched months only)
-    Pipeline.writeWarehouseIncremental(gold, s"$dir/whi")
-    Pipeline.writeWarehouseIncremental(gold, s"$dir/whi")
+    Pipeline.writeWarehouse(gold, s"$dir/whi", Pipeline.TouchedMonths)
+    Pipeline.writeWarehouse(gold, s"$dir/whi", Pipeline.TouchedMonths)
     assert(spark.read.parquet(s"$dir/whi/wholesale_cm2").count() == rows)
+
+    // both scopes publish every mart identically: same month directories,
+    // same rows
+    def months(scope: String, mart: String): Seq[String] =
+      new java.io.File(s"$dir/$scope/$mart").listFiles().map(_.getName)
+        .filter(_.startsWith("month_key=")).sorted.toSeq
+    for (m <- Pipeline.Mart.all.map(_.name)) {
+      assert(months("wh", m).nonEmpty && months("wh", m) == months("whi", m),
+        s"$m: ${months("wh", m)} vs ${months("whi", m)}")
+      val (wh, whi) = (spark.read.parquet(s"$dir/wh/$m"), spark.read.parquet(s"$dir/whi/$m"))
+      assert(wh.count() == whi.count() && wh.exceptAll(whi).isEmpty &&
+        whi.exceptAll(wh).isEmpty, s"$m differs between the two scopes")
+    }
   }
 }

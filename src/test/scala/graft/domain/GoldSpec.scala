@@ -123,12 +123,19 @@ class GoldSpec extends AnyFunSuite with SparkTestKit {
     val dir = java.nio.file.Files.createTempDirectory("graft-wh").toString
     val spec = GenSpec(joor = 40, shopify = 60, tiktok = 50, freight = 40)
     val (_, gold, kpiDf) = Pipeline.runInMemory(spark, spec, cfg)
-    Pipeline.writeWarehouse(gold, dir)
+    Pipeline.writeWarehouse(gold, dir, Pipeline.WholeTable)
     Pipeline.registerViews(spark, dir)
-    val viaSql = spark.sql(
-      "SELECT round(sum(total_revenue), 2) FROM exec_daily_kpi").first.getDouble(0)
-    val viaDf = kpiDf.agg(round(sum($"total_revenue"), 2)).first.getDouble(0)
-    assert(math.abs(viaSql - viaDf) < 1e-6)
+    val viaSql = spark.sql("SELECT * FROM exec_daily_kpi")
+    // same columns and types (read-back parquet makes every column nullable)
+    assert(viaSql.schema.map(f => f.name -> f.dataType) ==
+      kpiDf.schema.map(f => f.name -> f.dataType))
+    // row for row (ties on date_key have no order, so both sides sorted)
+    def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
+    val (sqlRows, dfRows) = (rows(viaSql), rows(kpiDf))
+    assert(sqlRows.nonEmpty && sqlRows == dfRows)
+    // newest day first, as the view's ORDER BY date_key DESC says
+    val days = viaSql.collect().map(_.getString(0)).toSeq
+    assert(days == days.sorted.reverse)
     // monthly partition layout exists (MergeTree intent)
     assert(new java.io.File(s"$dir/wholesale_cm2").listFiles()
       .exists(_.getName.startsWith("month_key=")))

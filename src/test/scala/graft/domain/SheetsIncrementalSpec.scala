@@ -51,7 +51,7 @@ class SheetsIncrementalSpec extends AnyFunSuite with SparkTestKit {
     // cycle 1: July
     val july = Pipeline.toGold(spark,
       Pipeline.runInMemory(spark, spec, cfg)._1, cfg)
-    Pipeline.writeWarehouseIncremental(july, dir)
+    Pipeline.writeWarehouse(july, dir, Pipeline.TouchedMonths)
     val afterJuly = spark.read.parquet(s"$dir/wholesale_cm2")
     val julyCount = afterJuly.count()
     // parquet partition discovery infers month_key as int — compare as string
@@ -62,14 +62,14 @@ class SheetsIncrementalSpec extends AnyFunSuite with SparkTestKit {
     val augCfg = cfg.copy(asOf = java.sql.Timestamp.valueOf("2025-08-15 10:00:00"))
     val august = Pipeline.toGold(spark,
       Pipeline.runInMemory(spark, spec, augCfg)._1, augCfg)
-    Pipeline.writeWarehouseIncremental(august, dir)
+    Pipeline.writeWarehouse(august, dir, Pipeline.TouchedMonths)
     val afterAug = spark.read.parquet(s"$dir/wholesale_cm2")
     assert(afterAug.select("month_key").distinct.count() == 2)
     assert(afterAug.filter($"month_key" === "202507").count() == julyCount)
 
     // cycle 3: July re-run — idempotent, NOT duplicated (the reference
     // would have appended a third copy by now)
-    Pipeline.writeWarehouseIncremental(july, dir)
+    Pipeline.writeWarehouse(july, dir, Pipeline.TouchedMonths)
     val afterRerun = spark.read.parquet(s"$dir/wholesale_cm2")
     assert(afterRerun.filter($"month_key" === "202507").count() == julyCount)
     assert(afterRerun.filter($"month_key" === "202508").count() > 0)

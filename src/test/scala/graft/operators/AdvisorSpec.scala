@@ -97,9 +97,9 @@ class AdvisorSpec extends AnyFunSuite with SparkTestKit {
     val spec = GenSpec(joor = 40, shopify = 60, tiktok = 50, freight = 40)
     val (_, gold, _) = Pipeline.runInMemory(spark, spec, cfg)
     val base = java.nio.file.Files.createTempDirectory("advisor_gold").toString
-    Pipeline.writeWarehouse(gold, s"$base/hand")
+    Pipeline.writeWarehouse(gold, s"$base/hand", Pipeline.WholeTable)
     val decisions = armed {
-      Pipeline.writeWarehouse(gold, s"$base/armed")
+      Pipeline.writeWarehouse(gold, s"$base/armed", Pipeline.WholeTable)
       Advisor.decisions(spark)
     }
     // every mart write recorded a z4 verdict with the exact PER-MONTH
